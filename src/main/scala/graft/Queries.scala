@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.pipeline.Pin
 
 /** The SQL-expressible operator surface (SURVEY.md §2.2–2.8 mappings) plus
   * the training-data-pipeline operators (dedup, similarity, text analysis).
@@ -558,11 +559,11 @@ object Queries {
   private def dupBandKeys(s: SparkSession, dir: String): DataFrame =
     dupBandKeyCache.computeIfAbsent(s.hashCode() + "|" + dir, _ =>
       graft.pipeline.Dedup.bandKeys(dupCorpus(s, dir), "doc_id", "text", None)
-        .localCheckpoint(true))
+        .transform(Pin(_)))
 
   private def dupClusterLabelsUncached(s: SparkSession, dir: String): DataFrame = {
     val keyed = dupBandKeys(s, dir)
-    val edges = graft.pipeline.Dedup.starEdges(keyed).localCheckpoint(false)
+    val edges = Pin(graft.pipeline.Dedup.starEdges(keyed), eager = false)
     graft.pipeline.Dedup.connectedComponents(
       keyed.select(col("id")).distinct(), edges)
   }
@@ -858,7 +859,7 @@ object Queries {
         val banded = sig.selectExpr("doc_id", "lang", "shingles",
           "stack(2, 0, md5(concat_ws('_', cast(m0 AS string), cast(m1 AS string))), " +
             "1, md5(concat_ws('_', cast(m2 AS string), cast(m3 AS string)))) AS (band_id, band_val)")
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val cand = banded.as("x").join(
             banded.select(col("doc_id"), col("shingles"), col("band_id"), col("band_val")).as("y"),
             col("x.band_id") === col("y.band_id") && col("x.band_val") === col("y.band_val"))
@@ -1028,7 +1029,7 @@ object Queries {
           // dot products run across the label tasks instead of on the
           // single-split scan (the q120 discipline)
           .repartition(col("label"))
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val a = e.select(col("label"), col("vec_id").as("ida"), col("v").as("va"),
           col("nrm").as("na"))
         val b = e.select(col("label"), col("vec_id").as("idb"), col("v").as("vb"),
@@ -1071,7 +1072,7 @@ object Queries {
           s"stack(4, $bandExprs) AS (band_id, band_val)")
           // r6: pinned — both self-join sides otherwise recompute the
           // corpus scan + signature (the q31 discipline)
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val cand = banded.as("x").join(
             banded.select(col("doc_id"), col("sh"), col("band_id"), col("band_val")).as("y"),
             col("x.band_id") === col("y.band_id") && col("x.band_val") === col("y.band_val"))
@@ -1169,7 +1170,7 @@ object Queries {
           .select(col("doc_id").as("id"),
             concat(lit("canon:"), trim(col("canon"))).as("band"))
         val keyed = dupBandKeys(s, dir).unionByName(canonKeys)
-        val edges = graft.pipeline.Dedup.starEdges(keyed).localCheckpoint(false)
+        val edges = Pin(graft.pipeline.Dedup.starEdges(keyed), eager = false)
         graft.pipeline.Dedup.connectedComponents(
             keyed.select(col("id")).distinct(), edges)
           .groupBy(col("comp")).agg(count(lit(1)).as("sz"))
@@ -1441,7 +1442,7 @@ object Queries {
         val train = grams.filter(pmod(col("doc_id"), lit(5)) < 4)
         val profile = train.groupBy(col("lang").as("plang"), col("tg"))
           .agg(count(lit(1)).as("cnt"))
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val totals = profile.groupBy(col("plang"))
           .agg(sum(col("cnt")).as("tot"))
         val freq = profile.join(totals, "plang")
@@ -1718,7 +1719,7 @@ object Queries {
           .withColumn("ord", col("doc_id") * 1000000L + col("pidx"))
           // r6: pinned — the first-occurrence aggregate and the join both
           // read the paragraph table (was 2 explode passes)
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val first = paras.groupBy(col("para")).agg(min(col("ord")).as("first_ord"))
         paras.join(first, "para").agg(
           count(lit(1)).as("n_paras"),
@@ -1766,14 +1767,14 @@ object Queries {
           .filter(size(col("wrd")) >= 2)
           .select(col("doc_id"), explode(expr(
             "transform(sequence(0, size(wrd)-2), i -> concat_ws(' ', element_at(wrd,i+1), element_at(wrd,i+2)))")).as("g"))
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val trainIds = t(s, dir, "documents")
           .select(col("doc_id"), md5(col("doc_id").cast("string")).as("__r"))
           .orderBy(col("__r"), col("doc_id")).limit(2000)
           .select(col("doc_id"))
         val train = bg.join(broadcast(trainIds), Seq("doc_id"))
         val lmCounts = train.groupBy(col("g")).agg(count(lit(1)).as("cnt"))
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val tot = lmCounts.agg(sum(col("cnt")).as("tot"))
         val lm = lmCounts
           .crossJoin(broadcast(tot))
@@ -1781,7 +1782,7 @@ object Queries {
         val scored = bg.join(broadcast(lm), Seq("g"), "left")
           .groupBy(col("doc_id"))
           .agg(expr("sum(coalesce(ppm, 0L)) div count(*)").as("avg_ppm"))
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val sample = scored.filter(pmod(col("doc_id"), lit(20)) === 0)
           .withColumn("b", ntile(3).over(Window.orderBy(col("avg_ppm").desc, col("doc_id"))))
         val cuts = sample.agg(
@@ -2044,7 +2045,7 @@ object Queries {
           // r6: pinned — the first-occurrence aggregate AND the dups join
           // both read the window table; without the pin the posexplode +
           // 10-gram concat pass ran twice
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val first = win.groupBy(col("g")).agg(min(col("ord")).as("first_ord"))
         val dups = win.join(first, "g").filter(col("ord") > col("first_ord"))
         val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -3176,7 +3177,7 @@ object Queries {
         // r6: pinned — doc count, document frequencies, and the scoring
         // join all read the postings (was 3 explode+aggregate passes)
         val posts = graft.pipeline.InvertedIndex.postings(t(s, dir, "documents"))
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val nd = posts.agg(countDistinct(col("doc_id")).cast("long").as("n_docs"))
         val dfT = posts.groupBy(col("term")).agg(count(lit(1)).cast("long").as("df"))
         val w = Window.partitionBy(col("doc_id"))
@@ -3223,18 +3224,18 @@ object Queries {
         // adjacent pairs) and token totals from the unigram counts, so
         // neither pays another corpus pass
         val toks = graft.pipeline.InvertedIndex.tokensPositional(t(s, dir, "documents"))
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
         val big = toks
           .withColumn("nxt", lead(col("term"), 1).over(w))
           .withColumn("npos", lead(col("pos"), 1).over(w))
           .filter(col("nxt").isNotNull && col("npos") === col("pos") + 1)
         val uni = toks.groupBy(col("term")).agg(count(lit(1)).cast("long").as("c1"))
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val tot = uni.agg(sum(col("c1")).cast("long").as("t_tokens"))
         val bi = big.groupBy(col("term"), col("nxt"))
           .agg(count(lit(1)).cast("long").as("c12"))
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val totB = bi.agg(sum(col("c12")).cast("long").as("t_bigrams"))
         bi.filter(col("c12") >= 5)
           .join(uni.select(col("term"), col("c1").as("cw1")), Seq("term"))
@@ -3500,7 +3501,7 @@ object Queries {
           // final stage attribution both read `staged`; without the pin
           // the corpus scan + stopword-ratio splits + percentile crossJoin
           // ran three times
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val surv = staged.filter(!col("blocked") && col("len_ok") && col("qual_ok"))
           .withColumn("h", md5(col("text").cast("binary")))
         val first = surv.groupBy(col("h")).agg(min(col("doc_id")).as("first_id"))
@@ -3573,7 +3574,7 @@ object Queries {
           // across the cluster tasks instead of on the 1-split scan
           .withColumn("nrm", expr("sqrt(aggregate(v, 0D, (acc,x) -> acc + x*x))"))
           .repartition(col("cluster"))
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val a = lists.select(col("cluster"), col("vec_id").as("ida"), col("v").as("va"),
           col("nrm").as("na"))
         val b = lists.select(col("cluster"), col("vec_id").as("idb"), col("v").as("vb"),
@@ -3630,7 +3631,7 @@ object Queries {
           .withColumn("bkt", expr("cast(conv(substr(md5(w), 1, 6), 16, 10) AS BIGINT) % 256"))
           .groupBy(col("doc_id"), col("lang"), col("bkt"))
           .agg(count(lit(1)).as("cnt"))
-          .localCheckpoint(true)
+          .transform(Pin(_))
         val tcnt = db.filter(col("lang") === "en")
           .groupBy(col("bkt")).agg(sum(col("cnt")).as("tc"))
         val rcnt = db.groupBy(col("bkt")).agg(sum(col("cnt")).as("rc"))

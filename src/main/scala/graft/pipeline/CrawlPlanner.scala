@@ -158,7 +158,7 @@ object CrawlPlanner {
       // materialize the schedule so BOTH pinned inputs can be released
       // before returning — without this, repeated plan() calls accumulate
       // cached partitions until executor storage evicts them
-      .localCheckpoint(true)
+      .transform(Pin(_))
     val maxWaves = planned.agg(coalesce(max(col("wave")), lit(-1L))).head().getLong(0) + 1
     consented.unpersist()
     novel.unpersist()

@@ -50,11 +50,7 @@ object CuratedPipeline {
       runId: String = "curate",
       precomputedLabels: Option[DataFrame] = None,
       canonicalCol: Option[String] = None,
-      reliable: Boolean = false,
       persistIndex: Boolean = true): Seq[LineageRow] = {
-
-    def cp(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
 
     val done = ExtractPipeline.committedBuckets(outDir)
     val remaining = (0 until numBuckets).filterNot(done)
@@ -69,12 +65,11 @@ object CuratedPipeline {
     // later ingest batch never re-clusters the whole corpus
     val keyed =
       if (persistIndex || precomputedLabels.isEmpty)
-        Some(cp(Dedup.bandKeys(corpus, idCol, textCol, canonicalCol)))
+        Some(Pin(Dedup.bandKeys(corpus, idCol, textCol, canonicalCol)))
       else None
     val labelsRaw = precomputedLabels.getOrElse {
-      val edges = cp(Dedup.starEdges(keyed.get))
-      Dedup.connectedComponents(keyed.get.select(col("id")).distinct(), edges,
-        reliable = reliable)
+      val edges = Pin(Dedup.starEdges(keyed.get))
+      Dedup.connectedComponents(keyed.get.select(col("id")).distinct(), edges)
     }
     val labels = labelsRaw
       .select(col("id").as("__cid"), col("comp").as("__comp"))
@@ -276,7 +271,7 @@ object CuratedPipeline {
         .select(col("id"), col("band")).distinct()
         .withColumn("increment", lit(target))
         .repartition(1)
-        .localCheckpoint(true)
+        .transform(Pin(_))
       folded.write.mode(SaveMode.Overwrite)
         .partitionBy("increment")
         .option("partitionOverwriteMode", "dynamic")
@@ -307,10 +302,7 @@ object CuratedPipeline {
   def curateIncrement(spark: SparkSession, newBatch: DataFrame, outDir: String,
       idCol: String = "id", textCol: String = "text",
       numBuckets: Int = 32, runId: String = "increment",
-      canonicalCol: Option[String] = None,
-      reliable: Boolean = false): Seq[LineageRow] = {
-    def cp(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
+      canonicalCol: Option[String] = None): Seq[LineageRow] = {
     val t0 = System.nanoTime()
 
     // Pin the batch ONCE, then test emptiness on the pinned frame: the
@@ -321,7 +313,7 @@ object CuratedPipeline {
     // job whose delta anti-joined to nothing) is a no-op — committing a
     // rows-less increment would poison compaction's schema inference and
     // grow the snapshot history for nothing.
-    val batch = cp(newBatch)
+    val batch = Pin(newBatch)
     if (batch.isEmpty) return Seq.empty
 
     val (curVersion, incs) = indexState(outDir)
@@ -330,7 +322,7 @@ object CuratedPipeline {
     val storedLabels = spark.read.parquet(indexLabelsDir(outDir, curVersion))
 
     // 1. band-key the batch (the only full pass over the new data)
-    val newKeys = cp(Dedup.bandKeys(batch, idCol, textCol, canonicalCol))
+    val newKeys = Pin(Dedup.bandKeys(batch, idCol, textCol, canonicalCol))
 
     // 2. probe: stored components touching a collided band, contracted to
     // their label vertex. The semi join is the index lookup — stored keys
@@ -342,20 +334,19 @@ object CuratedPipeline {
       .select(col("comp").as("id"), col("band")).distinct()
 
     // 3. components over the contracted graph
-    val k = cp(newKeys.unionByName(storedCompKeys))
-    val edges = cp(Dedup.starEdges(k))
-    val sub = cp(Dedup.connectedComponents(k.select(col("id")).distinct(), edges,
-      reliable = reliable))
+    val k = Pin(newKeys.unionByName(storedCompKeys))
+    val edges = Pin(Dedup.starEdges(k))
+    val sub = Pin(Dedup.connectedComponents(k.select(col("id")).distinct(), edges))
 
     // stored component labels that shrank → their canonical doc is demoted
     val storedCompIds = storedCompKeys.select(col("id")).distinct()
-    val remap = cp(sub.join(storedCompIds, Seq("id"))
+    val remap = Pin(sub.join(storedCompIds, Seq("id"))
       .filter(col("comp") =!= col("id"))
       .select(col("id").as("old_comp"), col("comp").as("new_comp")))
 
     // labels vNext = stored labels re-pointed through the remap ∪ new-doc labels
     val newDocLabels = sub.join(newKeys.select(col("id")).distinct(), Seq("id"))
-    val labelsNext = cp(storedLabels
+    val labelsNext = Pin(storedLabels
       .join(remap, storedLabels("comp") === remap("old_comp"), "left")
       .select(storedLabels("id"),
         coalesce(col("new_comp"), storedLabels("comp")).as("comp"))
@@ -396,7 +387,7 @@ object CuratedPipeline {
     if (newBuckets.nonEmpty) {
       // checkpoint so the post-write lineage counts reuse the computed
       // batch instead of re-deriving labels
-      val appended = cp(keptNew.repartition(newBuckets.length, col("part_bucket")))
+      val appended = Pin(keptNew.repartition(newBuckets.length, col("part_bucket")))
       appended.write.mode(SaveMode.Overwrite)
         .partitionBy("curate_inc", "part_bucket", "warc_day")
         .option("partitionOverwriteMode", "dynamic")
@@ -558,8 +549,7 @@ object CuratedPipeline {
       honorNoindex: Boolean = true, clusterByCanonical: Boolean = true,
       gopherGate: Boolean = false, scrubPii: Boolean = false,
       templateStrip: Boolean = false, hostCap: Option[Int] = None,
-      blocklist: Option[DataFrame] = None,
-      reliable: Boolean = false): (Seq[LineageRow], Seq[LineageRow]) = {
+      blocklist: Option[DataFrame] = None): (Seq[LineageRow], Seq[LineageRow]) = {
     val extractLineage = ExtractPipeline.run(spark, pages, s"$outDir/extract",
       numBuckets, snapshotGroups, runId)
     val extracted = ExtractPipeline.readOutput(spark, s"$outDir/extract")
@@ -601,9 +591,9 @@ object CuratedPipeline {
       else {
         // pin the gated frame first: the strip consumes it four ways
         // (exploded paras, two distinct-count aggs, the join-back left
-        // side) and without the pin each pass re-runs the extract scan +
-        // gates (the cp() convention curateIncrement already follows)
-        val base = gatedHosted.localCheckpoint(true)
+        // side) and without the pin each pass re-runs the extract scan
+        // and gates
+        val base = Pin(gatedHosted)
         val withHost = base.withColumn("__host", SkewTools.hostOf(col("url")))
         val stripped = TemplateStrip
           .strip(withHost, "__host", "id", "extracted_text")
@@ -644,8 +634,7 @@ object CuratedPipeline {
       idCol = "id", textCol = "extracted_text",
       numBuckets = numBuckets, snapshotGroups = snapshotGroups,
       runId = runId,
-      canonicalCol = if (clusterByCanonical) Some("canonical_url") else None,
-      reliable = reliable)
+      canonicalCol = if (clusterByCanonical) Some("canonical_url") else None)
     (extractLineage, curateLineage)
   }
 

@@ -42,9 +42,9 @@ object Dedup {
     * @return (id, comp) for every doc with ≥3 words; comp = min reachable id
     */
   def minhashClusterLabels(corpus: DataFrame, idCol: String, textCol: String,
-      reliable: Boolean = false, bands: Int = 1, rowsPerBand: Int = 2): DataFrame =
+      bands: Int = 1, rowsPerBand: Int = 2): DataFrame =
     clusterLabels(corpus, idCol, textCol, canonicalCol = None,
-      reliable = reliable, bands = bands, rowsPerBand = rowsPerBand)
+      bands = bands, rowsPerBand = rowsPerBand)
 
   /** [[minhashClusterLabels]] plus an optional CANONICAL key: real web
     * dedup stacks collapse pages sharing a `<link rel=canonical>` target
@@ -57,19 +57,15 @@ object Dedup {
     */
   def clusterLabels(corpus: DataFrame, idCol: String, textCol: String,
       canonicalCol: Option[String],
-      reliable: Boolean = false, bands: Int = 1, rowsPerBand: Int = 2): DataFrame = {
-    def cp(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-    // r6: the edge table is pinned LAZILY — it materializes inside the
-    // components loop's first action instead of paying a separate eager
-    // job (the minhash key table stays eager: it fans out into hubs, the
-    // star join, and the vertex list, and is the expensive subtree)
-    def cpLazy(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(false)
-    val keyedC = cp(bandKeys(corpus, idCol, textCol, canonicalCol, bands, rowsPerBand)) // minhash computed once
-    val edges = cpLazy(starEdges(keyedC))
-    connectedComponents(keyedC.select(col("id")).distinct(), edges,
-      reliable = reliable)
+      bands: Int = 1, rowsPerBand: Int = 2): DataFrame = {
+    // minhash computed once: the key table is pinned eagerly — it fans out
+    // into hubs, the star join, and the vertex list, and is the expensive
+    // subtree. r6: the edge table is pinned LAZILY — it materializes
+    // inside the components loop's first action instead of paying a
+    // separate eager job
+    val keyedC = Pin(bandKeys(corpus, idCol, textCol, canonicalCol, bands, rowsPerBand))
+    val edges = Pin(starEdges(keyedC), eager = false)
+    connectedComponents(keyedC.select(col("id")).distinct(), edges)
   }
 
   /** The (id, band) key table feeding the components pass: one key per
@@ -112,17 +108,22 @@ object Dedup {
   /** Symmetric star edges over a (id, band) key table: every id links to
     * its bucket's min-id hub — O(k) edges per bucket instead of the O(k²)
     * clique, with identical reachability.
+    *
+    * The output may hold DUPLICATE (src, dst) rows: a pair that shares its
+    * hub through two bands (or a content band and a canonical key) emits
+    * the edge once per shared bucket. That is safe for every consumer —
+    * [[connectedComponents]] takes a min over the joined labels, and min
+    * is idempotent, so a repeated edge never changes a label — and it
+    * saves the full edge-table shuffle a `distinct()` would cost. The
+    * duplicate fraction is bounded by docs agreeing on more than one key,
+    * which the LSH S-curve keeps tiny. Callers that count edges must
+    * dedupe themselves.
     */
   def starEdges(keyed: DataFrame): DataFrame = {
     val hubs = keyed.groupBy(col("band")).agg(min(col("id")).as("hub"))
     val star = keyed.join(hubs, Seq("band"))
       .filter(col("id") =!= col("hub"))
       .select(col("id").as("src"), col("hub").as("dst"))
-    // No distinct(): min-label propagation is idempotent under duplicate
-    // edges (a pair sharing its hub through two bands), and the distinct
-    // was a full extra shuffle of the edge table per clustering — the
-    // duplicate fraction is bounded by docs agreeing on >1 band, which the
-    // LSH S-curve keeps tiny (guide §2.4: remove shuffles outright).
     star.unionByName(star.select(col("dst").as("src"), col("src").as("dst")))
   }
 
@@ -144,25 +145,16 @@ object Dedup {
     * @param vertices one column `id` (long)
     * @param edges    columns `src`, `dst`; must contain both directions of
     *                 each undirected edge (a symmetric band self-join does)
-    * @param reliable when true, truncate lineage with reliable
-    *                 `checkpoint()` against the session's configured
-    *                 checkpoint dir (survives executor loss on a real
-    *                 cluster) instead of `localCheckpoint` (executor-local
-    *                 blocks: fast, but an executor loss mid-loop kills the
-    *                 lineage-truncated plan). Local mode defaults to the
-    *                 fast path; a cluster deployment at 100 TB should pass
-    *                 true after `spark.sparkContext.setCheckpointDir(...)`.
+    * Each round's lineage is truncated through [[Pin]], so on a cluster the
+    * per-round labels land in the checkpoint dir and survive executor loss.
+    *
     * @return (id, comp) with comp = min reachable id
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
-      maxIters: Int = 60, reliable: Boolean = false): DataFrame = {
-    // r6: per-round pins are LAZY local checkpoints — the round's checksum
-    // aggregate is the action that materializes them, so each round costs
-    // ONE job instead of an eager-materialize job plus a checksum job.
-    // (`reliable` keeps the eager reliable checkpoint: on a real cluster
-    // the pin must land before the lineage is dropped.)
-    def cp(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(false)
+      maxIters: Int = 60): DataFrame = {
+    // r6: per-round pins are LAZY — the round's checksum aggregate is the
+    // action that materializes them, so each round costs ONE job instead
+    // of an eager-materialize job plus a checksum job
     // initial labels are a 2-op projection over the caller's (usually
     // already-pinned) vertex table — no checkpoint needed before round 1
     var labels = vertices.select(col("id"), col("id").as("comp"))
@@ -198,14 +190,14 @@ object Dedup {
       // union branches — one computation, shared blocks. (A second jump
       // per round was measured round-neutral — labels are already
       // compressed against the information available.)
-      val jumped = cp(in.join(l2, in("comp") === l2("jid"), "left")
-        .select(in("id"), coalesce(col("jcomp"), in("comp")).as("comp")))
+      val jumped = Pin(in.join(l2, in("comp") === l2("jid"), "left")
+        .select(in("id"), coalesce(col("jcomp"), in("comp")).as("comp")), eager = false)
       // checkpoint per round: an iterative DataFrame loop must truncate
       // lineage or round k re-executes rounds 1..k-1
-      cp(edges.join(jumped, edges("src") === jumped("id"))
+      Pin(edges.join(jumped, edges("src") === jumped("id"))
         .select(col("dst").as("id"), col("comp"))
         .unionByName(jumped)
-        .groupBy(col("id")).agg(min(col("comp")).as("comp")))
+        .groupBy(col("id")).agg(min(col("comp")).as("comp")), eager = false)
     }
     while (!done && iter < maxIters) {
       labels = round(round(labels))

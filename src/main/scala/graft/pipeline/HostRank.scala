@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * float drift across engines or partitionings.
   *
   * The fixed-iteration form here is the oracle-friendly surface; a
-  * production run iterates to a fixpoint with `localCheckpoint` every few
+  * production run iterates to a fixpoint with a [[Pin]] every few
   * rounds (the connectedComponents pattern used by Dedup.clusters) —
   * each iteration is one hash join edges⋈ranks + one hash agg, over
   * host-cardinality tables (orders of magnitude smaller than the corpus).

@@ -29,10 +29,22 @@ object Ivf {
   private def dist2(a: String, b: String) =
     expr(s"aggregate(zip_with($a, $b, (x,y) -> (x-y)*(x-y)), 0D, (acc,v) -> acc + v)")
 
+  /** Most centroid rows brought to the driver. A coarse quantizer's C is
+    * thousands at most (see the object scaladoc), so ten thousand leaves
+    * headroom while a corpus-sized table passed as centroids fails with a
+    * message instead of exhausting the driver heap.
+    */
+  val MaxCentroids = 10000
+
   /** Collected (cluster, cv) centroid rows, ascending by cluster id. */
-  private def collectCents(centroids: DataFrame): Seq[(Int, Seq[Double])] =
-    centroids.select(col("cluster").cast("int"), col("cv")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+  private def collectCents(centroids: DataFrame): Seq[(Int, Seq[Double])] = {
+    val rows = centroids.select(col("cluster").cast("int"), col("cv"))
+      .limit(MaxCentroids + 1).collect()
+    require(rows.length <= MaxCentroids,
+      s"centroid table has more than $MaxCentroids rows — pass the C-row " +
+        "table Ivf.train returns, not a corpus-sized one")
+    rows.map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+  }
 
   /** Squared distance from vector column `v` to one literal centroid —
     * the exact r5 expression (`aggregate(zip_with(v, cv, (x,y)->(x-y)*(x-y)),
@@ -90,17 +102,11 @@ object Ivf {
 
   /** Train: seed centroids are the first `c` vectors by id (deterministic —
     * on a production corpus this is the offline k-means|| job), refined by
-    * `iters` Lloyd steps. Returns (cluster, cv).
-    *
-    * @param reliable kept for API compatibility; the r6 literal-centroid
-    *                 implementation collects each step's C-row result to
-    *                 the driver (driver-small), so lineage is truncated by
-    *                 construction and no checkpoint of either kind is
-    *                 needed — executor loss mid-train recomputes only the
-    *                 current step.
+    * `iters` Lloyd steps. Returns (cluster, cv). Each step collects its
+    * C-row result to the driver, so lineage is truncated by construction
+    * and no pin is needed.
     */
-  def train(emb: DataFrame, c: Int = 16, iters: Int = 2,
-      reliable: Boolean = false): DataFrame = {
+  def train(emb: DataFrame, c: Int = 16, iters: Int = 2): DataFrame = {
     val spark = emb.sparkSession
     val vecs = emb.select(col("vec_id"),
       expr("transform(embedding, x -> cast(x AS DOUBLE))").as("v"))

@@ -159,7 +159,7 @@ object Multimodal {
       expr("aggregate(features, 0D, (acc,x) -> acc + cast(x AS DOUBLE)*x)") > 0)
       .withColumn("__nrm",
         expr("sqrt(aggregate(features, 0D, (acc,x) -> acc + cast(x AS DOUBLE)*x))"))
-      .localCheckpoint(true)
+      .transform(Pin(_))
     val q = meta.select(col("url").as("query_url"), col("features").as("qf"),
       col("media_type"), col("__nrm").as("nq"))
     val c = meta.select(col("url").as("cand_url"), col("features").as("cf"),

@@ -79,7 +79,7 @@ object TemplateStrip {
     // of the paragraph table instead of each re-running the full explode
     // subtree (3 passes -> 2: one for the keys, one for the decision join)
     val keys = paras.select(col(hostCol), col(idCol), col("para"))
-      .localCheckpoint(true)
+      .transform(Pin(_))
     val hostDocs = keys.groupBy(col(hostCol))
       .agg(countDistinct(col(idCol)).as("host_docs"))
     val paraDocs = keys.groupBy(col(hostCol), col("para"))

@@ -54,7 +54,7 @@ object WarcDedup {
     // sha1-over-bodies pass; pinning the THIN rows (never the bodies)
     // keeps this safe at archive scale
     val thin = keyed.select(col("__digest"), col("warc_ts"), col("url"))
-      .localCheckpoint(true)
+      .transform(Pin(_))
     val firsts = thin
       .groupBy(col("__digest"))
       .agg(min(struct(col("warc_ts"), col("url"))).as("__f"))

@@ -112,19 +112,26 @@ class DedupSpec extends AnyFunSuite {
     assert(edges.forall { case (s, d) => edges.contains((d, s)) })
   }
 
-  test("reliable checkpointing yields identical labels (cluster-durable path)") {
+  test("labels pinned on the durable branch are row-identical to the local labels") {
     import spark.implicits._
-    val cpDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(cpDir)
-    val vs = (0L to 10L)
-    val v = vs.toDF("id")
-    val es = vs.init.map(i => (i, i + 1L))
-    val e = (es ++ es.map(p => (p._2, p._1))).toDF("src", "dst")
-    val reliable = Dedup.connectedComponents(v, e, reliable = true)
-      .as[(Long, Long)].collect().toMap
-    val local = Dedup.connectedComponents(v, e).as[(Long, Long)].collect().toMap
-    assert(reliable == local)
-    assert(reliable.values.toSet == Set(0L))
+    val cpDir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    sc.setCheckpointDir(cpDir.toString)
+    try {
+      val vs = (0L to 10L)
+      val v = vs.toDF("id")
+      val es = vs.init.map(i => (i, i + 1L))
+      val e = (es ++ es.map(p => (p._2, p._1))).toDF("src", "dst")
+      val labels = Dedup.connectedComponents(v, e)
+      val durable = Pin.pin(labels, eager = true, durable = true)
+        .as[(Long, Long)].collect().toMap
+      val local = labels.as[(Long, Long)].collect().toMap
+      assert(durable == local)
+      assert(durable.values.toSet == Set(0L))
+      assert(java.nio.file.Files.walk(cpDir).anyMatch(java.nio.file.Files.isRegularFile(_)),
+        "the durable pin wrote nothing under the checkpoint dir")
+    } finally sc.setCheckpointDir(prev.orNull)
   }
 
   test("two chained band-buckets merge through the shared doc (LSH bridge shape)") {

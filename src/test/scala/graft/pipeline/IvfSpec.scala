@@ -73,4 +73,13 @@ class IvfSpec extends AnyFunSuite {
     val b = Ivf.search(emb, Ivf.train(emb, 16, 2), col("vec_id") < 3, 3, 4).collect().toSeq
     assert(a == b)
   }
+
+  test("assign rejects a corpus-sized centroid table with a message instead of collecting it") {
+    val tooMany = spark.range(0, Ivf.MaxCentroids + 1L)
+      .select(col("id").cast("int").as("cluster"), array(lit(0.0d)).as("cv"))
+    val vecs = emb.select(col("vec_id"),
+      expr("transform(embedding, x -> cast(x AS DOUBLE))").as("v"))
+    val e = intercept[IllegalArgumentException](Ivf.assign(vecs, tooMany))
+    assert(e.getMessage.contains(s"more than ${Ivf.MaxCentroids} rows"))
+  }
 }
