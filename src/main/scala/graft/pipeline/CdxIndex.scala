@@ -235,7 +235,7 @@ object CdxIndex {
   private def writeGeneration(spark: SparkSession, es: Dataset[CdxEntry],
       idxDir: String, gen: Int, shards: Int): Seq[(String, String, Long)] = {
     val confBc = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+      new SerializableConfiguration(LocalFs.hadoopConf(spark)))
     // range-partition on urlkey ALONE: equal keys then land in one shard
     // by construction, so a multi-capture url (same key, many ts) can
     // never straddle a shard boundary and hide its older captures from
@@ -304,7 +304,7 @@ object CdxIndex {
     */
   private def commitCluster(spark: SparkSession, idxDir: String,
       segments: Seq[String], shards: Seq[(String, String, Long)]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = LocalFs.hadoopConf(spark)
     val fs = new Path(idxDir).getFileSystem(conf)
     val tmp = new Path(s"$idxDir/cluster.idx.tmp")
     val out = fs.create(tmp, true)

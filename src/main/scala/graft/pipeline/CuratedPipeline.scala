@@ -127,7 +127,7 @@ object CuratedPipeline {
         }
       }(Encoders.row(slice.schema))
 
-      counted.write.mode(SaveMode.Overwrite)
+      counted.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
         .partitionBy("curate_inc", "part_bucket", "warc_day")
         // scoped dynamic overwrite: a torn group's rewrite replaces exactly
         // its buckets (same protocol as ExtractPipeline)
@@ -217,11 +217,12 @@ object CuratedPipeline {
   private def writeIndex(spark: SparkSession, outDir: String,
       keys: DataFrame, labels: DataFrame, increment: Long, labelsVersion: Long): Unit = {
     keys.select(col("id"), col("band")).withColumn("increment", lit(increment))
-      .write.mode(SaveMode.Overwrite)
+      .write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
       .partitionBy("increment")
       .option("partitionOverwriteMode", "dynamic") // replay rewrites only increment=<k>
       .parquet(indexBandsDir(outDir))
-    labels.select(col("id"), col("comp")).write.mode(SaveMode.Overwrite)
+    labels.select(col("id"), col("comp"))
+      .write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
       .parquet(indexLabelsDir(outDir, labelsVersion))
     val dir = java.nio.file.Paths.get(outDir, "_manifest")
     java.nio.file.Files.createDirectories(dir)
@@ -272,7 +273,7 @@ object CuratedPipeline {
         .withColumn("increment", lit(target))
         .repartition(1)
         .transform(Pin(_))
-      folded.write.mode(SaveMode.Overwrite)
+      folded.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
         .partitionBy("increment")
         .option("partitionOverwriteMode", "dynamic")
         .parquet(indexBandsDir(outDir))
@@ -388,7 +389,7 @@ object CuratedPipeline {
       // checkpoint so the post-write lineage counts reuse the computed
       // batch instead of re-deriving labels
       val appended = Pin(keptNew.repartition(newBuckets.length, col("part_bucket")))
-      appended.write.mode(SaveMode.Overwrite)
+      appended.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
         .partitionBy("curate_inc", "part_bucket", "warc_day")
         .option("partitionOverwriteMode", "dynamic")
         .option("compression", "zstd")
@@ -410,7 +411,7 @@ object CuratedPipeline {
     remap.select(col("old_comp").as("id"))
       .withColumn("increment", lit(inc))
       .repartition(1)
-      .write.mode(SaveMode.Overwrite)
+      .write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
       .partitionBy("increment")
       .option("partitionOverwriteMode", "dynamic")
       .parquet(demotedDir(outDir))
@@ -776,7 +777,7 @@ object CuratedPipeline {
       .getOrElse(newRows)
       .repartition(numBuckets, col("part_bucket"))
     val next = st.version + 1
-    union.write.mode(SaveMode.Overwrite)
+    union.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
       .partitionBy("part_bucket", "warc_day")
       .option("compression", "zstd")
       .option("parquet.block.size", (16 * 1024 * 1024).toString)

@@ -37,8 +37,10 @@ object Export {
     */
   def writeTwoSheet(extracted: DataFrame, outDir: String): Unit = {
     metadataSheet(extracted).coalesce(1)
-      .write.option("header", "true").mode("overwrite").csv(s"$outDir/invoice_details")
+      .write.options(LocalFs.writeOptions)
+      .option("header", "true").mode("overwrite").csv(s"$outDir/invoice_details")
     productsSheet(extracted).coalesce(1)
-      .write.option("header", "true").mode("overwrite").csv(s"$outDir/products")
+      .write.options(LocalFs.writeOptions)
+      .option("header", "true").mode("overwrite").csv(s"$outDir/products")
   }
 }

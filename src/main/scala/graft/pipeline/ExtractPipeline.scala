@@ -1,11 +1,15 @@
 package graft.pipeline
 
+import org.apache.spark.rdd.PartitionPruningRDD
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
-/** Per-partition lineage row (SURVEY.md §7.5 / FIXTURES.md §3). */
+/** Per-partition lineage row (SURVEY.md §7.5 / FIXTURES.md §3). In the
+  * extract table one task writes one bucket, and `partition_id` is that
+  * bucket's id.
+  */
 final case class LineageRow(
     run_id: String,
     snapshot_id: String,
@@ -30,12 +34,16 @@ final case class LineageRow(
   *   out/_manifest/manifest.jsonl        — one line per committed snapshot,
   *                                         listing bucket ids + lineage
   *
-  * Commit protocol: buckets are processed in snapshot groups; each group's
-  * parquet append completes BEFORE its manifest line is written, so a kill
-  * between the two at worst reprocesses one group (append of the same
-  * deterministic rows into a bucket it then overwrites is avoided by
-  * re-writing the whole group with dynamic partition overwrite). Resume
-  * reads the manifest and anti-joins committed buckets (J3).
+  * Commit protocol: the buckets still to commit are shuffled ONCE per run,
+  * one bucket per partition, and committed in snapshot groups that each
+  * read only their own partitions of that shuffle. Each group's parquet
+  * write completes BEFORE its manifest line is written; the write uses
+  * dynamic partition overwrite, so re-running a torn group replaces
+  * exactly its buckets and never appends duplicate rows. A kill therefore
+  * wastes at most the scan+shuffle plus one group's extraction. Nothing
+  * is pinned: a lost executor's map output recomputes from the input.
+  * Resume reads the manifest and leaves committed buckets out of the
+  * shuffle (J3).
   */
 object ExtractPipeline {
 
@@ -106,8 +114,9 @@ object ExtractPipeline {
     *                    bucket(url); sized so one bucket ≪ executor memory
     *                    at the target SF)
     * @param snapshotGroups how many commit points (snapshots) a full run has
-    * @return lineage rows of THIS run (committed work from prior runs is
-    *         not re-reported)
+    * @return lineage rows of THIS run, one per bucket it committed with
+    *         `partition_id` = the bucket id (committed work from prior runs
+    *         is not re-reported)
     */
   def run(spark: SparkSession, pages: Dataset[Page], outDir: String,
       numBuckets: Int = 32, snapshotGroups: Int = 4,
@@ -118,23 +127,28 @@ object ExtractPipeline {
     val remaining = (0 until numBuckets).filterNot(done)
     if (remaining.isEmpty) return Seq.empty
 
-    val bucketed = pages
+    // slot = the bucket's index in `remaining` (-1: committed), so the one
+    // shuffle places exactly one bucket in each partition, with no hash
+    // collisions, and the writer emits one file per bucket and day. One
+    // array read per row, indexed by bucket id, whatever numBuckets is.
+    val slotOf = Array.fill(numBuckets)(-1)
+    remaining.zipWithIndex.foreach { case (b, s) => slotOf(b) = s }
+    val slot = element_at(typedLit(slotOf), col("part_bucket") + 1)
+    val shuffled = pages
       .withColumn("part_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
+      .filter(slot >= 0)
+      .repartitionById(remaining.length, slot)
+      .as[BucketedPage].rdd
 
-    val groups = remaining.grouped(math.max(1, (numBuckets + snapshotGroups - 1) / snapshotGroups)).toSeq
-    val allLineage = scala.collection.mutable.ArrayBuffer.empty[LineageRow]
-
-    groups.zipWithIndex.foreach { case (buckets, gi) =>
+    val groupSize = math.max(1, (numBuckets + snapshotGroups - 1) / snapshotGroups)
+    remaining.indices.grouped(groupSize).toSeq.zipWithIndex.flatMap { case (slots, gi) =>
+      val buckets = slots.map(remaining)
       val snapshotId = f"snap-$runId-$gi%03d"
       val metricsAcc = spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$snapshotId")
-      val slice = bucketed.filter(col("part_bucket").isin(buckets.map(Integer.valueOf): _*))
-        // co-locate each bucket in one task: the shuffle key IS the hidden
-        // partition, so the parquet writer emits one file per bucket instead
-        // of numTasks×numBuckets fragments
-        .repartition(buckets.length, col("part_bucket"))
-
-      val extracted = slice.as[BucketedPage]
-        .mapPartitions { it =>
+      // this group's slots of the shared shuffle: the map stage ran once,
+      // later groups fetch its output and skip it
+      val extracted = PartitionPruningRDD.create(shuffled, slots.contains(_))
+        .mapPartitionsWithIndex { (i, it) =>
           val t0 = System.nanoTime()
           var inRows = 0L; var ok = 0L; var fail = 0L; var bytes = 0L
           var reported = false
@@ -150,8 +164,7 @@ object ExtractPipeline {
               val h = out.hasNext
               if (!h && !reported) {
                 reported = true
-                metricsAcc.add(LineageRow(runId, snapshotId,
-                  org.apache.spark.TaskContext.getPartitionId(), inRows, ok, fail,
+                metricsAcc.add(LineageRow(runId, snapshotId, buckets(i), inRows, ok, fail,
                   bytes, (System.nanoTime() - t0) / 1000000, "committed"))
               }
               h
@@ -160,7 +173,7 @@ object ExtractPipeline {
           }
         }
 
-      extracted
+      spark.createDataset(extracted)
         .withColumn("part_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
         .withColumn("warc_day", to_date(col("warc_ts")))
         .write.mode(SaveMode.Overwrite)
@@ -170,6 +183,7 @@ object ExtractPipeline {
         // THIS write (not the session conf) so callers' later partitioned
         // writes keep whatever overwrite semantics they expect.
         .option("partitionOverwriteMode", "dynamic")
+        .options(LocalFs.writeOptions)
         .option("compression", "zstd") // text-heavy output: zstd ≫ snappy at scale
         // 16 MB row groups: the default 128 MB makes every write task hold
         // a huge column buffer — on faulting-sensitive hosts that's a 2-3x
@@ -177,16 +191,15 @@ object ExtractPipeline {
         .option("parquet.block.size", (16 * 1024 * 1024).toString)
         .parquet(s"$outDir/data")
 
-      // dedupe by partition id: a retried or speculative task reaches the
+      // dedupe by bucket: a retried or speculative task reaches the
       // end-of-iterator report twice with identical (deterministic)
-      // counts — keep one row per partition so the manifest audit trail
+      // counts — keep one row per bucket so the manifest audit trail
       // never overcounts
       val lineage = metricsAcc.value.asScala.toSeq
         .groupBy(_.partition_id).map(_._2.head).toSeq.sortBy(_.partition_id)
       appendManifest(outDir, runId, snapshotId, buckets, lineage)
-      allLineage ++= lineage
+      lineage
     }
-    allLineage.toSeq
   }
 
   /** Read the committed output table. */

@@ -153,10 +153,10 @@ object InvertedIndex {
     // sorted by term within files: postings for one term cluster together,
     // so a term-keyed read touches few row groups (min/max pruning)
     p.sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(s"$idxDir/g$g")
+      .write.mode("overwrite").options(LocalFs.writeOptions).parquet(s"$idxDir/g$g")
     spark.read.parquet(s"$idxDir/g$g")
       .groupBy(col("doc_id")).agg(sum(col("tf")).cast("long").as("dl"))
-      .write.mode("overwrite").parquet(s"$idxDir/l$g")
+      .write.mode("overwrite").options(LocalFs.writeOptions).parquet(s"$idxDir/l$g")
     val st = spark.read.parquet(s"$idxDir/l$g")
       .agg(count(lit(1)).cast("long"), sum(col("dl")).cast("long")).head()
     val (nDocs, totalDl) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
@@ -222,9 +222,9 @@ object InvertedIndex {
     if (meta.length <= 1) return
     val g = meta.map(_.gen).max + 1
     read(spark, idxDir).sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(s"$idxDir/g$g")
+      .write.mode("overwrite").options(LocalFs.writeOptions).parquet(s"$idxDir/g$g")
     readLens(spark, idxDir)
-      .write.mode("overwrite").parquet(s"$idxDir/l$g")
+      .write.mode("overwrite").options(LocalFs.writeOptions).parquet(s"$idxDir/l$g")
     // stats are additive under the disjoint-append contract — the fold's
     // manifest line is pure arithmetic, no recount
     val (nDocs, totalDl) = (meta.map(_.nDocs).sum, meta.map(_.totalDl).sum)

@@ -36,6 +36,11 @@ object RunExtract {
       f"processedThisRun=${lineage.map(_.input_rows).sum} " +
       f"buckets=${ExtractPipeline.committedBuckets(outDir).size} " +
       f"wall=$sec%.1fs throughput=${if (sec > 0) lineage.map(_.input_rows).sum / sec else 0}%.0f docs/sec")
+    // per-bucket skew: one task commits one bucket, so a max far above the
+    // median is a hot bucket, measured before anyone rebalances
+    val ms = lineage.map(_.ms).sorted
+    if (ms.nonEmpty)
+      println(s"[extract] bucketMs max=${ms.last} median=${ms(ms.size / 2)} buckets=${ms.size}")
     spark.stop()
   }
 }

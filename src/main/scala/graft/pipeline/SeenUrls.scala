@@ -66,7 +66,7 @@ object SeenUrls {
       else math.max(1L << 16, urls.count() * 5 / 4)
     val bf = urls.stat.bloomFilter("url", items, fpp)
     val path = bloomPath(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = path.getFileSystem(LocalFs.hadoopConf(spark))
     val out = fs.create(path, true)
     try bf.writeTo(out) finally out.close()
     // token written AFTER the filter: a crash between the two leaves a
@@ -110,7 +110,7 @@ object SeenUrls {
     */
   def markCdxCovered(spark: SparkSession, outDir: String, cdxDir: String): Unit = {
     val p = coversPath(cdxDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(LocalFs.hadoopConf(spark))
     val out = fs.create(p, true)
     try out.write(s"""{"snapshots":${snapshotToken(outDir)}}""".getBytes("UTF-8"))
     finally out.close()

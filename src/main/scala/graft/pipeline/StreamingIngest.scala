@@ -62,7 +62,7 @@ object StreamingIngest {
       .withColumn("ingest_batch", lit(batchId))
       .withColumn("part_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
       .withColumn("warc_day", to_date(col("warc_ts")))
-    extracted.write.mode(SaveMode.Overwrite)
+    extracted.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
       .partitionBy("ingest_batch", "part_bucket", "warc_day")
       // dynamic overwrite scoped to THIS batch's partitions: replay rewrites
       // ingest_batch=<id>/... in place, exactly-once by construction
@@ -197,7 +197,7 @@ object StreamingIngest {
       .dropDuplicates("ingest_batch", "url")
       .repartition(numBuckets, col("part_bucket")) // ≈1 file per bucket dir
     val next = st.version + 1
-    union.write.mode(SaveMode.Overwrite)
+    union.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
       .partitionBy("part_bucket", "warc_day")
       .option("compression", "zstd")
       .option("parquet.block.size", (16 * 1024 * 1024).toString)

@@ -83,7 +83,7 @@ object WarcDedup {
     */
   def writeDeduped(spark: SparkSession, pages: Dataset[Page], dir: String): DedupWriteStats = {
     val confBc = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+      new SerializableConfiguration(LocalFs.hadoopConf(spark)))
     val rows = classify(pages).select(
       col("url"), col("warc_ts"), col("html"), col("is_revisit"),
       col("refers_to_url"), col("refers_to_ts"))

@@ -19,7 +19,7 @@ object WarcWriter {
   def write(spark: SparkSession, pages: Dataset[Page], dir: String): Long = {
     import spark.implicits._
     val confBc = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+      new SerializableConfiguration(LocalFs.hadoopConf(spark)))
     val counts = pages.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val path = new Path(f"$dir/part-$pid%05d.warc.gz")

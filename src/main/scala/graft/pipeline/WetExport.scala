@@ -40,7 +40,7 @@ object WetExport {
     val slim = df.selectExpr("url", "cast(warc_ts AS string) AS ts", "extracted_text")
       .as[(String, String, String)]
     val confBc = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+      new SerializableConfiguration(LocalFs.hadoopConf(spark)))
     val stats = slim.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val path = new Path(f"$dir/part-$pid%05d.warc.wet.gz")
@@ -120,7 +120,7 @@ object WetExport {
         s""""as_of_increment": ${asOfIncrement.map(_.toString).getOrElse("null")}, """ +
         s""""files": [${files.mkString(", ")}]}"""
     val mPath = new Path(s"$dir/release.json")
-    val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = mPath.getFileSystem(LocalFs.hadoopConf(spark))
     val out = fs.create(mPath, true)
     try out.write(manifest.getBytes(UTF_8)) finally out.close()
     stats.map(_.records).sum

@@ -89,6 +89,56 @@ class PipelineSpec extends AnyFunSuite {
     assert(lineage.map(_.bytes_in).sum > 0)
   }
 
+  test("lineage: one row per committed bucket, input_rows = that bucket's committed rows") {
+    val out = tmpDir()
+    val pages = ExtractStage.generatePages(spark, 300, partitions = 8)
+    val lineage = ExtractPipeline.run(spark, pages, out, numBuckets = 8, snapshotGroups = 4, runId = "pb")
+    assert(lineage.map(_.partition_id) == (0 until 8))
+    val committed = ExtractPipeline.readOutput(spark, out).groupBy("part_bucket").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    lineage.foreach { l =>
+      assert(l.input_rows == committed.getOrElse(l.partition_id, 0L), s"bucket ${l.partition_id}")
+    }
+  }
+
+  test("a run reads its input once, however many snapshot groups it commits") {
+    import spark.implicits._
+    val out = tmpDir()
+    val n = 400L
+    val reads = spark.sparkContext.longAccumulator("pages-read")
+    val pages = ExtractStage.generatePages(spark, n, partitions = 8)
+      .map { p => reads.add(1); p }
+    ExtractPipeline.run(spark, pages, out, numBuckets = 8, snapshotGroups = 4, runId = "once")
+    assert(ExtractPipeline.committedBuckets(out) == (0 until 8).toSet)
+    assert(reads.value == n, s"input rows read ${reads.value} times for $n pages")
+  }
+
+  test("torn run with non-contiguous remaining buckets resumes to the clean output") {
+    import spark.implicits._
+    val outClean = tmpDir(); val outTorn = tmpDir()
+    val pages = ExtractStage.generatePages(spark, 400, partitions = 8)
+    ExtractPipeline.run(spark, pages, outClean, numBuckets = 8, snapshotGroups = 4, runId = "clean")
+
+    // drop manifest lines 1 and 3 of 4: buckets {0,1} and {4,5} remain, so
+    // the resume's shuffle slots 0..3 map to buckets 0, 1, 4, 5
+    ExtractPipeline.run(spark, pages, outTorn, numBuckets = 8, snapshotGroups = 4, runId = "t1")
+    val mf = Paths.get(outTorn, "_manifest", "manifest.jsonl")
+    val lines = Files.readAllLines(mf)
+    Files.write(mf, (lines.get(1) + "\n" + lines.get(3) + "\n").getBytes("UTF-8"))
+    assert(ExtractPipeline.committedBuckets(outTorn) == Set(2, 3, 6, 7))
+
+    val resumed = ExtractPipeline.run(spark, pages, outTorn, numBuckets = 8, snapshotGroups = 4, runId = "t2")
+    assert(resumed.map(_.partition_id) == Seq(0, 1, 4, 5))
+    assert(ExtractPipeline.committedBuckets(outTorn) == (0 until 8).toSet)
+
+    def rows(dir: String) = ExtractPipeline.readOutput(spark, dir)
+      .select($"url", $"part_bucket", $"extracted_text", $"invoice_number")
+      .as[(String, Int, String, String)].collect().sortBy(_._1)
+    val clean = rows(outClean)
+    assert(clean.length == 400)
+    assert(clean.sameElements(rows(outTorn)), "resumed output must equal clean-run output")
+  }
+
   test("output layout is bucket(url) + days(warc_ts); point read prunes to one bucket") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val out = tmpDir()

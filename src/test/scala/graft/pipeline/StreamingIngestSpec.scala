@@ -149,7 +149,14 @@ class StreamingIngestSpec extends AnyFunSuite {
     val keptAfterB0 = CuratedPipeline.readKept(spark, cur).count()
     assert(keptAfterB0 > 0)
 
-    slice(200, 400).write.parquet(s"$src/f1")
+    // the second input lands atomically (written aside, then one directory
+    // rename), as the file source requires: the running stream lists `src`
+    // continuously, and a listing in the middle of a writer's job commit
+    // would split f1 across two micro-batches
+    val staged = tmp()
+    slice(200, 400).write.parquet(s"$staged/f1")
+    Files.move(Paths.get(staged, "f1"), Paths.get(src, "f1"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     q.processAllAvailable()
     q.stop()
     // second batch curated INCREMENTALLY: labels version bumped, not rebuilt
