@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The composed training-data pipeline: extract → quality gate → near-dup
@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * This object composes the pieces that already exist —
   * [[ExtractPipeline.run]] (committed extract table),
   * [[Dedup.minhashClusterLabels]] (cluster labels), min-id canonical
-  * keep — into one resumable job with the same manifest/lineage protocol
-  * and the same `(part_bucket, warc_day)` hidden-partition layout as the
-  * extract table.
+  * keep — into one resumable job committed through [[Commit]], like the
+  * extract table, in the same `(part_bucket, warc_day)` hidden-partition
+  * layout under a `curate_inc` prefix.
   *
   * Keep rule: within each duplicate cluster the canonical doc is the one
   * whose id equals the component label (= min id in the cluster);
@@ -42,7 +42,7 @@ object CuratedPipeline {
     *                `<link rel=canonical>` target) cluster together even
     *                with unrelated text — the site-declared dup signal,
     *                resolved in the same components pass as content LSH
-    * @return lineage rows of THIS run (kept rows per partition)
+    * @return lineage rows of THIS run, one per committed bucket
     */
   def run(spark: SparkSession, corpus: DataFrame, outDir: String,
       idCol: String = "id", textCol: String = "text",
@@ -86,62 +86,9 @@ object CuratedPipeline {
       .join(labels, col(idCol) === col("__cid"), "left")
       .filter(col("__comp").isNull || col("__comp") === col(idCol))
       .drop("__cid", "__comp")
-      .withColumn("curate_inc", lit(0))
-      .withColumn("part_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
-      .withColumn("warc_day", to_date(col("warc_ts")))
-
-    val groups = remaining.grouped(
-      math.max(1, (numBuckets + snapshotGroups - 1) / snapshotGroups)).toSeq
-    val allLineage = scala.collection.mutable.ArrayBuffer.empty[LineageRow]
-
-    groups.zipWithIndex.foreach { case (buckets, gi) =>
-      val snapshotId = f"snap-$runId-$gi%03d"
-      val acc = spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$snapshotId")
-      val slice = kept.filter(col("part_bucket").isin(buckets.map(Integer.valueOf): _*))
-        // co-locate each bucket in one task (one output file per bucket)
-        .repartition(buckets.length, col("part_bucket"))
-
-      val textIdx = slice.schema.fieldIndex(textCol)
-      val counted: Dataset[Row] = slice.mapPartitions { it =>
-        val t0 = System.nanoTime()
-        var rows = 0L; var bytes = 0L
-        var reported = false
-        val out = it.map { r =>
-          rows += 1
-          val t = if (r.isNullAt(textIdx)) null else r.getString(textIdx)
-          bytes += (if (t == null) 0 else t.length)
-          r
-        }
-        new Iterator[Row] {
-          def hasNext: Boolean = {
-            val h = out.hasNext
-            if (!h && !reported) {
-              reported = true
-              acc.add(LineageRow(runId, snapshotId,
-                org.apache.spark.TaskContext.getPartitionId(), rows, rows, 0L,
-                bytes, (System.nanoTime() - t0) / 1000000, "committed"))
-            }
-            h
-          }
-          def next(): Row = out.next()
-        }
-      }(Encoders.row(slice.schema))
-
-      counted.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
-        .partitionBy("curate_inc", "part_bucket", "warc_day")
-        // scoped dynamic overwrite: a torn group's rewrite replaces exactly
-        // its buckets (same protocol as ExtractPipeline)
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "zstd")
-        .option("parquet.block.size", (16 * 1024 * 1024).toString)
-        .parquet(s"$outDir/data")
-
-      import scala.jdk.CollectionConverters._
-      val lineage = acc.value.asScala.toSeq
-        .groupBy(_.partition_id).map(_._2.head).toSeq.sortBy(_.partition_id)
-      ExtractPipeline.appendManifest(outDir, runId, snapshotId, buckets, lineage)
-      allLineage ++= lineage
-    }
+      .withColumn("part_bucket", Commit.bucketOf(col("url"), numBuckets))
+    val lineage = commitKept(kept, outDir, textCol, numBuckets, remaining,
+      snapshotGroups, runId, inc = 0)
     // index commits LAST — after every kept bucket. The ordering matters
     // for the continuous path: curateBatch dispatches on indexState, so a
     // run killed mid-corpus must replay as run() (resume), never as an
@@ -151,7 +98,23 @@ object CuratedPipeline {
     // (deterministic) and lands here again.
     if (persistIndex)
       writeIndex(spark, outDir, keyed.get, labelsRaw, increment = 0L, labelsVersion = 1L)
-    allLineage.toSeq
+    lineage
+  }
+
+  /** Commit kept rows (carrying `part_bucket`) under `curate_inc=<inc>`
+    * through [[Commit.commitGroups]]; lineage counts each row ok, with its
+    * text length as its bytes.
+    */
+  private def commitKept(kept: DataFrame, outDir: String, textCol: String,
+      numBuckets: Int, buckets: Seq[Int], snapshotGroups: Int, runId: String,
+      inc: Int): Seq[LineageRow] = {
+    val textIdx = kept.schema.fieldIndex(textCol)
+    Commit.commitGroups(kept, outDir, numBuckets, buckets, snapshotGroups, runId,
+        Seq("curate_inc" -> lit(inc),
+          "part_bucket" -> col("part_bucket"),
+          "warc_day" -> to_date(col("warc_ts")))) { r =>
+      (r, true, if (r.isNullAt(textIdx)) 0L else r.getString(textIdx).length.toLong)
+    }(Encoders.row(kept.schema))
   }
 
   // ---- the persisted dedup index + incremental curation ------------------
@@ -200,35 +163,21 @@ object CuratedPipeline {
 
   /** (current labels version, committed increment ids); (0, ∅) = no index. */
   def indexState(outDir: String): (Long, Set[Long]) = {
-    val mf = java.nio.file.Paths.get(outDir, "_manifest", "index_manifest.jsonl")
-    if (!java.nio.file.Files.exists(mf)) return (0L, Set.empty)
-    var version = 0L
-    val incs = scala.collection.mutable.Set.empty[Long]
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(mf).asScala.foreach { line =>
-      val vm = java.util.regex.Pattern.compile("\"labels_version\":(\\d+)").matcher(line)
-      if (vm.find()) version = math.max(version, vm.group(1).toLong)
-      val im = java.util.regex.Pattern.compile("\"increment\":(\\d+)").matcher(line)
-      if (im.find()) incs += im.group(1).toLong
-    }
-    (version, incs.toSet)
+    val lines = Commit.lines(Commit.manifest(outDir, "index_manifest.jsonl"))
+    ((0L +: lines.flatMap(Commit.longField(_, "labels_version"))).max,
+      lines.flatMap(Commit.longField(_, "increment")).toSet)
   }
 
   private def writeIndex(spark: SparkSession, outDir: String,
       keys: DataFrame, labels: DataFrame, increment: Long, labelsVersion: Long): Unit = {
-    keys.select(col("id"), col("band")).withColumn("increment", lit(increment))
-      .write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
-      .partitionBy("increment")
-      .option("partitionOverwriteMode", "dynamic") // replay rewrites only increment=<k>
-      .parquet(indexBandsDir(outDir))
+    // replay rewrites only increment=<k>
+    Commit.write(keys.select(col("id"), col("band")).withColumn("increment", lit(increment)),
+      indexBandsDir(outDir), "increment")
     labels.select(col("id"), col("comp"))
       .write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
       .parquet(indexLabelsDir(outDir, labelsVersion))
-    val dir = java.nio.file.Paths.get(outDir, "_manifest")
-    java.nio.file.Files.createDirectories(dir)
-    val line = s"""{"increment":$increment,"labels_version":$labelsVersion}""" + "\n"
-    java.nio.file.Files.write(dir.resolve("index_manifest.jsonl"), line.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    Commit.appendLine(Commit.manifest(outDir, "index_manifest.jsonl"),
+      s"""{"increment":$increment,"labels_version":$labelsVersion}""")
   }
 
   /** Read the current (id, comp) labels table — the committed materialized
@@ -273,10 +222,7 @@ object CuratedPipeline {
         .withColumn("increment", lit(target))
         .repartition(1)
         .transform(Pin(_))
-      folded.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
-        .partitionBy("increment")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(indexBandsDir(outDir))
+      Commit.write(folded, indexBandsDir(outDir), "increment")
       incs.filter(_ != target).foreach { k =>
         fs.delete(new org.apache.hadoop.fs.Path(
           s"${indexBandsDir(outDir)}/increment=$k"), true)
@@ -298,13 +244,12 @@ object CuratedPipeline {
     *
     * @param newBatch same shape as `run`'s corpus; ids must be globally
     *                 unique and DISJOINT from everything already curated
-    * @return lineage rows (one per rewritten bucket)
+    * @return lineage rows, one per bucket the increment appended to
     */
   def curateIncrement(spark: SparkSession, newBatch: DataFrame, outDir: String,
       idCol: String = "id", textCol: String = "text",
       numBuckets: Int = 32, runId: String = "increment",
       canonicalCol: Option[String] = None): Seq[LineageRow] = {
-    val t0 = System.nanoTime()
 
     // Pin the batch ONCE, then test emptiness on the pinned frame: the
     // batch's lineage often includes corpus-sized anti-joins (seen-ids,
@@ -378,51 +323,23 @@ object CuratedPipeline {
         col(idCol) === col("__cid"), "left")
       .filter(col("__comp").isNull || col("__comp") === col(idCol))
       .drop("__cid", "__comp")
-      .withColumn("curate_inc", lit(inc.toInt))
-      .withColumn("part_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
-      .withColumn("warc_day", to_date(col("warc_ts")))
+      .withColumn("part_bucket", Commit.bucketOf(col("url"), numBuckets))
     val newBuckets: Seq[Int] = keptNew.select(col("part_bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-
-    val lineage = scala.collection.mutable.ArrayBuffer.empty[LineageRow]
-    if (newBuckets.nonEmpty) {
-      // checkpoint so the post-write lineage counts reuse the computed
-      // batch instead of re-deriving labels
-      val appended = Pin(keptNew.repartition(newBuckets.length, col("part_bucket")))
-      appended.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
-        .partitionBy("curate_inc", "part_bucket", "warc_day")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "zstd")
-        .option("parquet.block.size", (16 * 1024 * 1024).toString)
-        .parquet(s"$outDir/data")
-      val ms = (System.nanoTime() - t0) / 1000000
-      val counts: Map[Int, (Long, Long)] = appended.groupBy(col("part_bucket"))
-        .agg(count(lit(1)).as("n"), sum(length(col(textCol)).cast("long")).as("bytes"))
-        .collect().map(r => r.getInt(0) -> ((r.getLong(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2)))).toMap
-      newBuckets.foreach { b =>
-        val (n, bytes) = counts.getOrElse(b, (0L, 0L))
-        lineage += LineageRow(runId, s"snap-$runId-inc", b, n, n, 0L, bytes, ms, "committed")
-      }
-    }
+    // one snapshot group: the whole append commits as one snapshot
+    val lineage = commitKept(keptNew, outDir, textCol, numBuckets, newBuckets,
+      snapshotGroups = 1, runId, inc.toInt)
     // the logical-delete partition for THIS increment — dynamic overwrite,
     // so a replay rewrites exactly increment=<k>; committed BEFORE the
     // index manifest line like every other artifact of the increment
-    remap.select(col("old_comp").as("id"))
+    Commit.write(remap.select(col("old_comp").as("id"))
       .withColumn("increment", lit(inc))
-      .repartition(1)
-      .write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
-      .partitionBy("increment")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(demotedDir(outDir))
+      .repartition(1), demotedDir(outDir), "increment")
 
     // 5. commit the index LAST: bands increment + labels vNext, manifest after
     writeIndex(spark, outDir, newKeys, labelsNext, increment = inc,
       labelsVersion = curVersion + 1)
-    if (newBuckets.nonEmpty)
-      ExtractPipeline.appendManifest(outDir, runId, s"snap-$runId-inc",
-        newBuckets, lineage.toSeq)
-    lineage.toSeq
+    lineage
   }
 
   /** One micro-batch of the CONTINUOUS curation pipeline: gate a batch's
@@ -443,17 +360,9 @@ object CuratedPipeline {
       extractDir: String, curatedDir: String,
       numBuckets: Int = 32, minTextLength: Int = 1,
       honorNoindex: Boolean = true, clusterByCanonical: Boolean = true): Seq[LineageRow] = {
-    val mf = java.nio.file.Paths.get(curatedDir, "_manifest", "curated_batches.jsonl")
-    val doneBatches: Set[Long] =
-      if (!java.nio.file.Files.exists(mf)) Set.empty
-      else {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(mf).asScala.flatMap { line =>
-          val m = java.util.regex.Pattern.compile("\"batch_id\":(\\d+)").matcher(line)
-          if (m.find()) Some(m.group(1).toLong) else None
-        }.toSet
-      }
-    if (doneBatches.contains(batchId)) return Seq.empty
+    val mf = Commit.manifest(curatedDir, "curated_batches.jsonl")
+    if (Commit.lines(mf).flatMap(Commit.longField(_, "batch_id")).contains(batchId))
+      return Seq.empty
 
     val gated = StreamingIngest.readCommitted(spark, extractDir)
       .filter(col("ingest_batch") === batchId)
@@ -487,11 +396,7 @@ object CuratedPipeline {
           canonicalCol = canonical)
       }
 
-    val dir = java.nio.file.Paths.get(curatedDir, "_manifest")
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.write(dir.resolve("curated_batches.jsonl"),
-      (s"""{"batch_id":$batchId}""" + "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    Commit.appendLine(mf, s"""{"batch_id":$batchId}""")
     lineage
   }
 
@@ -506,7 +411,7 @@ object CuratedPipeline {
     *
     * Staging through the committed extract table means extraction runs
     * exactly once per page no matter how many snapshot groups the curate
-    * stage writes (each group re-SCANS kept rows from parquet, never
+    * stage writes (the curate stage scans the extract table, never
     * re-extracts), and a kill at any point resumes from whichever stage's
     * manifest is incomplete.
     *
@@ -679,19 +584,9 @@ object CuratedPipeline {
   private final case class KeptCompactState(version: Long, folded: Set[Long])
 
   private def keptCompactState(outDir: String): KeptCompactState = {
-    val mf = java.nio.file.Paths.get(outDir, "_manifest", "kept_compact_manifest.jsonl")
-    if (!java.nio.file.Files.exists(mf)) return KeptCompactState(0L, Set.empty)
-    var version = 0L
-    val folded = scala.collection.mutable.Set.empty[Long]
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(mf).asScala.foreach { line =>
-      val vm = java.util.regex.Pattern.compile("\"version\":(\\d+)").matcher(line)
-      if (vm.find()) version = math.max(version, vm.group(1).toLong)
-      val im = java.util.regex.Pattern.compile("\"incs\":\\[([0-9,]*)\\]").matcher(line)
-      if (im.find() && im.group(1).nonEmpty)
-        folded ++= im.group(1).split(",").map(_.toLong)
-    }
-    KeptCompactState(version, folded.toSet)
+    val lines = Commit.lines(Commit.manifest(outDir, "kept_compact_manifest.jsonl"))
+    KeptCompactState((0L +: lines.flatMap(Commit.longField(_, "version"))).max,
+      lines.flatMap(Commit.longsField(_, "incs")).toSet)
   }
 
   /** Raw committed kept rows, deletes NOT applied: current compact version
@@ -747,6 +642,7 @@ object CuratedPipeline {
     * any increment's view across the fold. Torn (uncommitted) increments
     * are excluded — their replay re-appends them after the fold. Single
     * maintenance writer assumed, like every compaction here.
+    * @param numBuckets the table's bucket count (one bucket per write task)
     * @return the new compact version (current version if nothing to fold)
     */
   def compactKept(spark: SparkSession, outDir: String, numBuckets: Int = 32): Long = {
@@ -775,19 +671,12 @@ object CuratedPipeline {
     val union = prev
       .map(p => p.unionByName(newRows.select(p.columns.map(col): _*)))
       .getOrElse(newRows)
-      .repartition(numBuckets, col("part_bucket"))
+      // one bucket per task: ≈1 file per bucket × day
+      .repartitionById(numBuckets, col("part_bucket"))
     val next = st.version + 1
-    union.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
-      .partitionBy("part_bucket", "warc_day")
-      .option("compression", "zstd")
-      .option("parquet.block.size", (16 * 1024 * 1024).toString)
-      .parquet(compactDataDir(outDir, next))
-    val dir = java.nio.file.Paths.get(outDir, "_manifest")
-    java.nio.file.Files.createDirectories(dir)
-    val line = s"""{"version":$next,"incs":[${(st.folded ++ todo).toSeq.sorted.mkString(",")}]}""" + "\n"
-    java.nio.file.Files.write(dir.resolve("kept_compact_manifest.jsonl"),
-      line.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    Commit.write(union, compactDataDir(outDir, next), "part_bucket", "warc_day")
+    Commit.appendLine(Commit.manifest(outDir, "kept_compact_manifest.jsonl"),
+      s"""{"version":$next,"incs":[${(st.folded ++ todo).toSeq.sorted.mkString(",")}]}""")
     next
   }
 
@@ -815,17 +704,11 @@ object CuratedPipeline {
     * curated table's snapshot history. One snapshot per increment; the
     * base build is increment 0.
     */
-  def keptSnapshots(outDir: String): Seq[(Long, Long)] = {
-    val mf = java.nio.file.Paths.get(outDir, "_manifest", "index_manifest.jsonl")
-    if (!java.nio.file.Files.exists(mf)) return Seq.empty
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(mf).asScala.toSeq.flatMap { line =>
-      val im = java.util.regex.Pattern.compile("\"increment\":(\\d+)").matcher(line)
-      val vm = java.util.regex.Pattern.compile("\"labels_version\":(\\d+)").matcher(line)
-      if (im.find() && vm.find()) Some((im.group(1).toLong, vm.group(1).toLong))
-      else None
+  def keptSnapshots(outDir: String): Seq[(Long, Long)] =
+    Commit.lines(Commit.manifest(outDir, "index_manifest.jsonl")).flatMap { line =>
+      for (i <- Commit.longField(line, "increment"); v <- Commit.longField(line, "labels_version"))
+        yield (i, v)
     }
-  }
 
   /** Time travel on the kept corpus: exactly what [[readKept]] returned
     * when increment `asOf` was the head — rows appended at increments

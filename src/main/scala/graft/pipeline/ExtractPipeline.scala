@@ -1,10 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.rdd.PartitionPruningRDD
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 /** Per-partition lineage row (SURVEY.md §7.5 / FIXTURES.md §3). In the
   * extract table one task writes one bucket, and `partition_id` is that
@@ -34,16 +32,7 @@ final case class LineageRow(
   *   out/_manifest/manifest.jsonl        — one line per committed snapshot,
   *                                         listing bucket ids + lineage
   *
-  * Commit protocol: the buckets still to commit are shuffled ONCE per run,
-  * one bucket per partition, and committed in snapshot groups that each
-  * read only their own partitions of that shuffle. Each group's parquet
-  * write completes BEFORE its manifest line is written; the write uses
-  * dynamic partition overwrite, so re-running a torn group replaces
-  * exactly its buckets and never appends duplicate rows. A kill therefore
-  * wastes at most the scan+shuffle plus one group's extraction. Nothing
-  * is pinned: a lost executor's map output recomputes from the input.
-  * Resume reads the manifest and leaves committed buckets out of the
-  * shuffle (J3).
+  * Commits follow the protocol of [[Commit]] (J3).
   */
 object ExtractPipeline {
 
@@ -52,26 +41,17 @@ object ExtractPipeline {
       url: String, warc_ts: java.sql.Timestamp, html: Array[Byte],
       text: String, lang: String, part_bucket: Int)
 
-  def committedBuckets(outDir: String): Set[Int] = {
-    val mf = Paths.get(outDir, "_manifest", "manifest.jsonl")
-    if (!Files.exists(mf)) Set.empty
-    else Files.readAllLines(mf).asScala.flatMap { line =>
-      // minimal parse: "buckets":[1,2,3]
-      val m = java.util.regex.Pattern.compile("\"buckets\":\\[([0-9,]*)\\]").matcher(line)
-      if (m.find() && m.group(1).nonEmpty) m.group(1).split(",").map(_.toInt).toSeq else Seq.empty
-    }.toSet
-  }
+  def committedBuckets(outDir: String): Set[Int] =
+    Commit.lines(Commit.manifest(outDir, "manifest.jsonl"))
+      .flatMap(Commit.longsField(_, "buckets")).map(_.toInt).toSet
 
   private[pipeline] def appendManifest(outDir: String, runId: String, snapshotId: String,
       buckets: Seq[Int], lineage: Seq[LineageRow]): Unit = {
-    val dir = Paths.get(outDir, "_manifest")
-    Files.createDirectories(dir)
     val lineageJson = lineage.map(l =>
       s"""{"partition_id":${l.partition_id},"input_rows":${l.input_rows},"ok_rows":${l.ok_rows},"fail_rows":${l.fail_rows},"bytes_in":${l.bytes_in},"ms":${l.ms},"status":"${l.status}"}""")
       .mkString("[", ",", "]")
-    val line = s"""{"run_id":"$runId","snapshot_id":"$snapshotId","buckets":[${buckets.mkString(",")}],"lineage":$lineageJson}""" + "\n"
-    Files.write(dir.resolve("manifest.jsonl"), line.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    Commit.appendLine(Commit.manifest(outDir, "manifest.jsonl"),
+      s"""{"run_id":"$runId","snapshot_id":"$snapshotId","buckets":[${buckets.mkString(",")}],"lineage":$lineageJson}""")
   }
 
   /** Snapshot-compact the manifest: fold every per-snapshot line into ONE
@@ -91,17 +71,13 @@ object ExtractPipeline {
     * @return number of manifest lines folded (0 = nothing to do)
     */
   def compactManifest(outDir: String): Int = {
-    val dir = Paths.get(outDir, "_manifest")
-    val mf = dir.resolve("manifest.jsonl")
-    if (!Files.exists(mf)) return 0
-    val lines = Files.readAllLines(mf).asScala.filter(_.nonEmpty)
+    val mf = Commit.manifest(outDir, "manifest.jsonl")
+    val lines = Commit.lines(mf)
     if (lines.size <= 1) return 0
     val buckets = committedBuckets(outDir).toSeq.sorted
-    val archive = dir.resolve("manifest_archive.jsonl")
-    Files.write(archive, (lines.mkString("\n") + "\n").getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    Commit.appendLine(mf.resolveSibling("manifest_archive.jsonl"), lines.mkString("\n"))
     val line = s"""{"run_id":"manifest-compact","snapshot_id":"compact","buckets":[${buckets.mkString(",")}],"lineage":[]}""" + "\n"
-    val tmp = dir.resolve("manifest.jsonl.tmp")
+    val tmp = mf.resolveSibling("manifest.jsonl.tmp")
     Files.write(tmp, line.getBytes("UTF-8"))
     Files.move(tmp, mf, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -124,81 +100,15 @@ object ExtractPipeline {
     import spark.implicits._
 
     val done = committedBuckets(outDir)
-    val remaining = (0 until numBuckets).filterNot(done)
-    if (remaining.isEmpty) return Seq.empty
-
-    // slot = the bucket's index in `remaining` (-1: committed), so the one
-    // shuffle places exactly one bucket in each partition, with no hash
-    // collisions, and the writer emits one file per bucket and day. One
-    // array read per row, indexed by bucket id, whatever numBuckets is.
-    val slotOf = Array.fill(numBuckets)(-1)
-    remaining.zipWithIndex.foreach { case (b, s) => slotOf(b) = s }
-    val slot = element_at(typedLit(slotOf), col("part_bucket") + 1)
-    val shuffled = pages
-      .withColumn("part_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
-      .filter(slot >= 0)
-      .repartitionById(remaining.length, slot)
-      .as[BucketedPage].rdd
-
-    val groupSize = math.max(1, (numBuckets + snapshotGroups - 1) / snapshotGroups)
-    remaining.indices.grouped(groupSize).toSeq.zipWithIndex.flatMap { case (slots, gi) =>
-      val buckets = slots.map(remaining)
-      val snapshotId = f"snap-$runId-$gi%03d"
-      val metricsAcc = spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$snapshotId")
-      // this group's slots of the shared shuffle: the map stage ran once,
-      // later groups fetch its output and skip it
-      val extracted = PartitionPruningRDD.create(shuffled, slots.contains(_))
-        .mapPartitionsWithIndex { (i, it) =>
-          val t0 = System.nanoTime()
-          var inRows = 0L; var ok = 0L; var fail = 0L; var bytes = 0L
-          var reported = false
-          val out = it.map { bp =>
-            val ep = ExtractStage.processOne(Page(bp.url, bp.warc_ts, bp.html, bp.text, bp.lang))
-            inRows += 1
-            if (ep.success) ok += 1 else fail += 1
-            bytes += (if (bp.html == null) 0 else bp.html.length)
-            ep
-          }
-          new Iterator[ExtractedPage] {
-            def hasNext: Boolean = {
-              val h = out.hasNext
-              if (!h && !reported) {
-                reported = true
-                metricsAcc.add(LineageRow(runId, snapshotId, buckets(i), inRows, ok, fail,
-                  bytes, (System.nanoTime() - t0) / 1000000, "committed"))
-              }
-              h
-            }
-            def next(): ExtractedPage = out.next()
-          }
-        }
-
-      spark.createDataset(extracted)
-        .withColumn("part_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
-        .withColumn("warc_day", to_date(col("warc_ts")))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("part_bucket", "warc_day")
-        // dynamic partition overwrite: re-running a torn group replaces
-        // exactly its buckets, never clobbering committed ones. Scoped to
-        // THIS write (not the session conf) so callers' later partitioned
-        // writes keep whatever overwrite semantics they expect.
-        .option("partitionOverwriteMode", "dynamic")
-        .options(LocalFs.writeOptions)
-        .option("compression", "zstd") // text-heavy output: zstd ≫ snappy at scale
-        // 16 MB row groups: the default 128 MB makes every write task hold
-        // a huge column buffer — on faulting-sensitive hosts that's a 2-3x
-        // throughput hit (BENCH.md), and smaller groups parallelize reads
-        .option("parquet.block.size", (16 * 1024 * 1024).toString)
-        .parquet(s"$outDir/data")
-
-      // dedupe by bucket: a retried or speculative task reaches the
-      // end-of-iterator report twice with identical (deterministic)
-      // counts — keep one row per bucket so the manifest audit trail
-      // never overcounts
-      val lineage = metricsAcc.value.asScala.toSeq
-        .groupBy(_.partition_id).map(_._2.head).toSeq.sortBy(_.partition_id)
-      appendManifest(outDir, runId, snapshotId, buckets, lineage)
-      lineage
+    val bucketed = pages
+      .withColumn("part_bucket", Commit.bucketOf(col("url"), numBuckets))
+      .as[BucketedPage]
+    Commit.commitGroups(bucketed, outDir, numBuckets,
+        (0 until numBuckets).filterNot(done), snapshotGroups, runId,
+        Seq("part_bucket" -> Commit.bucketOf(col("url"), numBuckets),
+          "warc_day" -> to_date(col("warc_ts")))) { bp =>
+      val ep = ExtractStage.processOne(Page(bp.url, bp.warc_ts, bp.html, bp.text, bp.lang))
+      (ep, ep.success, if (bp.html == null) 0L else bp.html.length.toLong)
     }
   }
 
@@ -214,22 +124,16 @@ object ExtractPipeline {
     */
   def snapshotHistory(outDir: String): Seq[(String, Set[Int])] = {
     def parse(path: java.nio.file.Path): Seq[(String, Set[Int])] =
-      if (!Files.exists(path)) Seq.empty
-      else Files.readAllLines(path).asScala.toSeq.filter(_.nonEmpty).flatMap { line =>
-        val sm = java.util.regex.Pattern.compile("\"snapshot_id\":\"([^\"]*)\"").matcher(line)
-        val bm = java.util.regex.Pattern.compile("\"buckets\":\\[([0-9,]*)\\]").matcher(line)
-        if (sm.find() && bm.find())
-          Some((sm.group(1),
-            if (bm.group(1).isEmpty) Set.empty[Int]
-            else bm.group(1).split(",").map(_.toInt).toSet))
-        else None
+      Commit.lines(path).flatMap { line =>
+        for (id <- Commit.field(line, "snapshot_id"); _ <- Commit.field(line, "buckets"))
+          yield (id, Commit.longsField(line, "buckets").map(_.toInt).toSet)
       }
-    val dir = Paths.get(outDir, "_manifest")
+    val mf = Commit.manifest(outDir, "manifest.jsonl")
     // the "compact" marker is filtered from BOTH sources: a second
     // compaction archives the first compaction's marker line, which must
     // not surface as a phantom snapshot in the history
-    val all = (parse(dir.resolve("manifest_archive.jsonl")) ++
-      parse(dir.resolve("manifest.jsonl"))).filterNot(_._1 == "compact")
+    val all = (parse(mf.resolveSibling("manifest_archive.jsonl")) ++ parse(mf))
+      .filterNot(_._1 == "compact")
     // archive + live manifest can briefly overlap right after compaction;
     // keep first occurrence, preserving commit order
     val seen = scala.collection.mutable.LinkedHashMap.empty[String, Set[Int]]
@@ -263,7 +167,7 @@ object ExtractPipeline {
   def pointLookup(spark: SparkSession, outDir: String, url: String,
       numBuckets: Int = 32) =
     readOutput(spark, outDir)
-      .filter(col("part_bucket") === pmod(xxhash64(lit(url)), lit(numBuckets)).cast("int")
+      .filter(col("part_bucket") === Commit.bucketOf(lit(url), numBuckets)
         && col("url") === url)
 
   /** S7's combined storage shape (reference /root/reference/app.py:451-456:

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Inverted-index retrieval over the corpus — the lexical complement of
   * the embedding ANN path (q34/q35/q48): build term postings once, then
@@ -116,21 +116,12 @@ object InvertedIndex {
   final case class IndexGen(gen: Long, nDocs: Long, totalDl: Long)
 
   /** Committed generation metadata, in commit order. */
-  def committedMeta(idxDir: String): Seq[IndexGen] = {
-    val mf = manifest(idxDir)
-    if (!Files.exists(mf)) Seq.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      val p = java.util.regex.Pattern.compile(
-        "\"gen\":(\\d+).*\"n_docs\":(\\d+).*\"total_dl\":(\\d+)")
-      Files.readAllLines(mf).asScala.toSeq.flatMap { line =>
-        val m = p.matcher(line)
-        if (m.find()) Some(IndexGen(m.group(1).toLong, m.group(2).toLong,
-          m.group(3).toLong))
-        else None
-      }.distinctBy(_.gen)
-    }
-  }
+  def committedMeta(idxDir: String): Seq[IndexGen] =
+    Commit.lines(manifest(idxDir)).flatMap { line =>
+      for (g <- Commit.longField(line, "gen"); n <- Commit.longField(line, "n_docs");
+           dl <- Commit.longField(line, "total_dl"))
+        yield IndexGen(g, n, dl)
+    }.distinctBy(_.gen)
 
   /** Committed generation numbers, in commit order. */
   def committedGens(idxDir: String): Seq[Long] = committedMeta(idxDir).map(_.gen)
@@ -160,10 +151,7 @@ object InvertedIndex {
     val st = spark.read.parquet(s"$idxDir/l$g")
       .agg(count(lit(1)).cast("long"), sum(col("dl")).cast("long")).head()
     val (nDocs, totalDl) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
-    Files.createDirectories(Paths.get(idxDir))
-    Files.write(manifest(idxDir),
-      (s"""{"gen":$g,"n_docs":$nDocs,"total_dl":$totalDl}""" + "\n").getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    Commit.appendLine(manifest(idxDir), s"""{"gen":$g,"n_docs":$nDocs,"total_dl":$totalDl}""")
     g
   }
 

@@ -43,6 +43,10 @@ object RunCurated {
       f"extractBuckets=${ExtractPipeline.committedBuckets(s"$outDir/extract").size} " +
       f"curatedBuckets=${ExtractPipeline.committedBuckets(s"$outDir/curated").size} " +
       f"digest=$digest wall=$sec%.1fs")
+    // per-bucket skew of the curate stage, as RunExtract reports it
+    val ms = cl.map(_.ms).sorted
+    if (ms.nonEmpty)
+      println(s"[curate] bucketMs max=${ms.last} median=${ms(ms.size / 2)} buckets=${ms.size}")
     spark.stop()
   }
 }

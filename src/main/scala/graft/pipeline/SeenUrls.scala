@@ -88,8 +88,7 @@ object SeenUrls {
     if (!fs.exists(path) || !fs.exists(metaPath(outDir))) return None
     val in = fs.open(metaPath(outDir))
     val meta = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val m = java.util.regex.Pattern.compile("\"snapshots\":(\\d+)").matcher(meta)
-    val builtAt = if (m.find()) m.group(1).toLong else -1L
+    val builtAt = Commit.longField(meta, "snapshots").getOrElse(-1L)
     if (builtAt != snapshotToken(outDir)) None // stale: commits advanced
     else {
       val bin = fs.open(path)
@@ -122,8 +121,7 @@ object SeenUrls {
     if (!fs.exists(p)) return -1L
     val in = fs.open(p)
     val meta = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val m = java.util.regex.Pattern.compile("\"snapshots\":(\\d+)").matcher(meta)
-    if (m.find()) m.group(1).toLong else -1L
+    Commit.longField(meta, "snapshots").getOrElse(-1L)
   }
 
   /** Split a batch into (definitely-new, maybe-seen) by the sketch. The

@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Continuous ingestion into the committed extract table: a Structured
@@ -32,22 +32,9 @@ import scala.jdk.CollectionConverters._
   */
 object StreamingIngest {
 
-  def committedBatches(outDir: String): Set[Long] = {
-    val mf = Paths.get(outDir, "_manifest", "stream_manifest.jsonl")
-    if (!Files.exists(mf)) Set.empty
-    else Files.readAllLines(mf).asScala.flatMap { line =>
-      val m = java.util.regex.Pattern.compile("\"batch_id\":(\\d+)").matcher(line)
-      if (m.find()) Some(m.group(1).toLong) else None
-    }.toSet
-  }
-
-  private def appendManifest(outDir: String, batchId: Long, rows: Long, ok: Long): Unit = {
-    val dir = Paths.get(outDir, "_manifest")
-    Files.createDirectories(dir)
-    val line = s"""{"batch_id":$batchId,"rows":$rows,"ok_rows":$ok}""" + "\n"
-    Files.write(dir.resolve("stream_manifest.jsonl"), line.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
+  def committedBatches(outDir: String): Set[Long] =
+    Commit.lines(Commit.manifest(outDir, "stream_manifest.jsonl"))
+      .flatMap(Commit.longField(_, "batch_id")).toSet
 
   /** The `foreachBatch` function: extract + commit one micro-batch.
     * Public and directly callable so tests (and a replay after restart)
@@ -60,21 +47,17 @@ object StreamingIngest {
     import spark.implicits._
     val extracted = batch.mapPartitions(_.map(ExtractStage.processOne)).toDF()
       .withColumn("ingest_batch", lit(batchId))
-      .withColumn("part_bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
+      .withColumn("part_bucket", Commit.bucketOf(col("url"), numBuckets))
       .withColumn("warc_day", to_date(col("warc_ts")))
-    extracted.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
-      .partitionBy("ingest_batch", "part_bucket", "warc_day")
-      // dynamic overwrite scoped to THIS batch's partitions: replay rewrites
-      // ingest_batch=<id>/... in place, exactly-once by construction
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "zstd")
-      .option("parquet.block.size", (16 * 1024 * 1024).toString)
-      .parquet(s"$outDir/data")
+    // dynamic overwrite: replay rewrites ingest_batch=<id>/... in place,
+    // exactly-once by construction
+    Commit.write(extracted, s"$outDir/data", "ingest_batch", "part_bucket", "warc_day")
     val stats = spark.read.parquet(s"$outDir/data")
       .filter(col("ingest_batch") === batchId)
       .agg(count(lit(1)), sum(when(col("success"), 1L).otherwise(0L))).head()
-    appendManifest(outDir, batchId, stats.getLong(0),
-      if (stats.isNullAt(1)) 0L else stats.getLong(1))
+    val ok = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+    Commit.appendLine(Commit.manifest(outDir, "stream_manifest.jsonl"),
+      s"""{"batch_id":$batchId,"rows":${stats.getLong(0)},"ok_rows":$ok}""")
   }
 
   /** Wire a pages stream into the committed table. Caller starts/stops the
@@ -158,23 +141,13 @@ object StreamingIngest {
   private final case class CompactState(version: Long, folded: Set[Long])
 
   private def compactState(outDir: String): CompactState = {
-    val mf = Paths.get(outDir, "_manifest", "compact_manifest.jsonl")
-    if (!Files.exists(mf)) return CompactState(0L, Set.empty)
-    val lines = Files.readAllLines(mf).asScala
-    if (lines.isEmpty) return CompactState(0L, Set.empty)
-    var version = 0L
-    val folded = scala.collection.mutable.Set.empty[Long]
-    lines.foreach { line =>
-      val vm = java.util.regex.Pattern.compile("\"version\":(\\d+)").matcher(line)
-      if (vm.find()) version = math.max(version, vm.group(1).toLong)
-      val bm = java.util.regex.Pattern.compile("\"batches\":\\[([0-9,]*)\\]").matcher(line)
-      if (bm.find() && bm.group(1).nonEmpty)
-        folded ++= bm.group(1).split(",").map(_.toLong)
-    }
-    CompactState(version, folded.toSet)
+    val lines = Commit.lines(Commit.manifest(outDir, "compact_manifest.jsonl"))
+    CompactState((0L +: lines.flatMap(Commit.longField(_, "version"))).max,
+      lines.flatMap(Commit.longsField(_, "batches")).toSet)
   }
 
-  /** Fold all committed-but-unfolded batches into the next compact version.
+  /** Fold all committed-but-unfolded batches into the next compact version,
+    * one bucket per write task (`numBuckets` = the table's bucket count).
     * Returns the new version, or the current one if nothing to fold.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, outDir: String,
@@ -195,18 +168,12 @@ object StreamingIngest {
     // if a crashed run half-wrote this version before the replay
     val union = prev.map(_.unionByName(newRows)).getOrElse(newRows)
       .dropDuplicates("ingest_batch", "url")
-      .repartition(numBuckets, col("part_bucket")) // ≈1 file per bucket dir
+      // one bucket per task: ≈1 file per bucket dir
+      .repartitionById(numBuckets, col("part_bucket"))
     val next = st.version + 1
-    union.write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
-      .partitionBy("part_bucket", "warc_day")
-      .option("compression", "zstd")
-      .option("parquet.block.size", (16 * 1024 * 1024).toString)
-      .parquet(s"$outDir/compact/v$next")
-    val dir = Paths.get(outDir, "_manifest")
-    Files.createDirectories(dir)
-    val line = s"""{"version":$next,"batches":[${(st.folded ++ todo).toSeq.sorted.mkString(",")}]}""" + "\n"
-    Files.write(dir.resolve("compact_manifest.jsonl"), line.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    Commit.write(union, s"$outDir/compact/v$next", "part_bucket", "warc_day")
+    Commit.appendLine(Commit.manifest(outDir, "compact_manifest.jsonl"),
+      s"""{"version":$next,"batches":[${(st.folded ++ todo).toSeq.sorted.mkString(",")}]}""")
     next
   }
 

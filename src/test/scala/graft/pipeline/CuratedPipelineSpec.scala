@@ -559,6 +559,69 @@ class CuratedPipelineSpec extends AnyFunSuite {
     assert(clean.sameElements(torn), "resumed kept corpus must equal clean run")
   }
 
+  /** 400 docs over 8 partitions; docs 300..399 repeat the text of docs
+    * 0..99, so dedup drops 100 of them. `reads` counts rows produced.
+    */
+  private def corpus400(reads: Option[org.apache.spark.util.LongAccumulator] = None) = {
+    import spark.implicits._
+    spark.range(0L, 400L, 1L, 8).map { i =>
+      reads.foreach(_.add(1))
+      CurDoc(i, s"u$i", java.sql.Timestamp.valueOf(s"2024-03-0${1 + i % 3} 10:00:00"),
+        Seq("a", "b", "c", "d", "e").map(w => s"w${i % 300}$w").mkString(" "),
+        if (i % 2 == 0) "a" else "b")
+    }.toDF()
+  }
+
+  test("a curate run reads its corpus a bounded number of times, however many snapshot groups it commits") {
+    val out = tmpDir()
+    val reads = spark.sparkContext.longAccumulator("corpus-read")
+    CuratedPipeline.run(spark, corpus400(Some(reads)), out,
+      numBuckets = 8, snapshotGroups = 4, runId = "once")
+    assert(ExtractPipeline.committedBuckets(out) == (0 until 8).toSet)
+    // once for the pinned band keys, once for the shared shuffle
+    assert(reads.value == 800L, s"corpus rows read ${reads.value} times for 400 docs")
+  }
+
+  test("curated lineage: one row per committed bucket, input_rows = that bucket's kept rows") {
+    val out = tmpDir()
+    val lineage = CuratedPipeline.run(spark, corpus400(), out,
+      numBuckets = 8, snapshotGroups = 4, runId = "pb")
+    assert(lineage.map(_.partition_id) == (0 until 8))
+    val kept = CuratedPipeline.readKept(spark, out).groupBy("part_bucket").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(kept.values.sum == 300L)
+    lineage.foreach { l =>
+      assert(l.input_rows == kept.getOrElse(l.partition_id, 0L), s"bucket ${l.partition_id}")
+    }
+  }
+
+  test("torn curate run with non-contiguous remaining buckets resumes to the clean output") {
+    import spark.implicits._
+    val outClean = tmpDir(); val outTorn = tmpDir()
+    CuratedPipeline.run(spark, corpus400(), outClean,
+      numBuckets = 8, snapshotGroups = 4, runId = "clean")
+
+    // drop manifest lines 1 and 3 of 4: buckets {0,1} and {4,5} remain
+    CuratedPipeline.run(spark, corpus400(), outTorn,
+      numBuckets = 8, snapshotGroups = 4, runId = "t1")
+    val mf = Paths.get(outTorn, "_manifest", "manifest.jsonl")
+    val lines = Files.readAllLines(mf)
+    Files.write(mf, (lines.get(1) + "\n" + lines.get(3) + "\n").getBytes("UTF-8"))
+    assert(ExtractPipeline.committedBuckets(outTorn) == Set(2, 3, 6, 7))
+
+    val resumed = CuratedPipeline.run(spark, corpus400(), outTorn,
+      numBuckets = 8, snapshotGroups = 4, runId = "t2")
+    assert(resumed.map(_.partition_id) == Seq(0, 1, 4, 5))
+    assert(ExtractPipeline.committedBuckets(outTorn) == (0 until 8).toSet)
+
+    def rows(dir: String) = CuratedPipeline.readKept(spark, dir)
+      .select($"id", $"part_bucket", $"warc_day".cast("string"), $"text")
+      .as[(Long, Int, String, String)].collect().sortBy(_._1)
+    val clean = rows(outClean)
+    assert(clean.length == 300)
+    assert(clean.sameElements(rows(outTorn)), "resumed kept corpus must equal the clean run")
+  }
+
   test("flagship composition: pages → extract table → quality gate → kept corpus, torn at either stage") {
     import spark.implicits._
     val n = 300L
