@@ -20,35 +20,32 @@ object PagesQueries {
   // one extraction pass shared by all queries in a session — the FUSED
   // generate→extract path (single narrow stage, no intermediate Page
   // encoder round-trip; round 1 paid that round-trip here and q50 was the
-  // most expensive bench entry)
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def extracted(s: SparkSession, sfDir: String): DataFrame =
-    cache.computeIfAbsent(s.hashCode() + "|" + sfDir, _ =>
-      graft.pipeline.ExtractStage
-        .generateAndExtract(s, pageCount(sfDir), partitions = 32).toDF().persist())
+  // most expensive bench entry). Held as a cached temp view in the
+  // session's own catalog, keyed by page count.
+  private def extracted(s: SparkSession, sfDir: String): DataFrame = {
+    val view = s"graft_extracted_${pageCount(sfDir)}"
+    if (!s.catalog.tableExists(view)) {
+      graft.pipeline.ExtractStage.generateAndExtract(s, pageCount(sfDir), partitions = 32)
+        .toDF().createOrReplaceTempView(view)
+      s.catalog.cacheTable(view)
+    }
+    s.table(view)
+  }
 
   // one committed output table (bucket(url) + days(warc_ts) hidden
   // partitioning) shared by the storage-layer queries q59-q61
-  private val outCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def committedOut(s: SparkSession, sfDir: String): String =
-    outCache.computeIfAbsent(s.hashCode() + "|" + sfDir, _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft-committed").toString
+    graft.Artifacts.dir(s, sfDir, "committed") { out =>
       val pages = graft.pipeline.ExtractStage.generatePages(s, pageCount(sfDir), partitions = 32)
       graft.pipeline.ExtractPipeline.run(s, pages, out,
         numBuckets = 16, snapshotGroups = 4, runId = "pq")
-      out
-    })
+    }
 
   // a streaming-ingested + half-compacted table shared by q65: batch 0
   // committed and folded into compact v1, batch 1 committed but raw
-  private val streamCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def streamedOut(s: SparkSession, sfDir: String): String =
-    streamCache.computeIfAbsent(s.hashCode() + "|" + sfDir, _ => {
+    graft.Artifacts.dir(s, sfDir, "streamed") { out =>
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-streamed").toString
       // micro-batches sliced by page INDEX range (a pure generator column,
       // no giant isin over urls); 1000 pages exercise the cycle fully
       val n = math.min(pageCount(sfDir), 1000L)
@@ -60,33 +57,24 @@ object PagesQueries {
       graft.pipeline.StreamingIngest.compact(s, out, numBuckets = 16)
       graft.pipeline.StreamingIngest.commitBatch(out, numBuckets = 16)(
         pagesRange(n / 2, n), 1L)
-      out
-    })
+    }
 
   // WARC segments written once per (session, sfDir) — the crawl-format
   // interchange surface q68 reads back through the streaming source
-  private val warcCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def warcOut(s: SparkSession, sfDir: String): String =
-    warcCache.computeIfAbsent(s.hashCode() + "|" + sfDir, _ => {
+    graft.Artifacts.dir(s, sfDir, "warc") { out =>
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-warc-q68").toString
       val n = math.min(pageCount(sfDir), 1000L)
       val pages = s.range(0L, n, 1L, 4).map(i =>
         graft.pipeline.PageGen.page(graft.pipeline.PageGen.DefaultSeed, i))
       graft.pipeline.WarcWriter.write(s, pages, out)
-      out
-    })
+    }
 
   // CDX index over the q68 WARC segments, built once per (session, sfDir)
-  private val cdxCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cdxOut(s: SparkSession, sfDir: String): String =
-    cdxCache.computeIfAbsent(s.hashCode() + "|" + sfDir, _ => {
-      val idx = java.nio.file.Files.createTempDirectory("graft-cdx-q82").toString
+    graft.Artifacts.dir(s, sfDir, "cdx") { idx =>
       graft.pipeline.CdxIndex.build(s, warcOut(s, sfDir) + "/part-*", idx, shards = 4)
-      idx
-    })
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -24,20 +24,20 @@ import org.apache.spark.sql.functions._
   * Resume: the dedup decision is GLOBAL (labels depend on the whole
   * corpus), so a resumed run recomputes labels over the full input — which
   * is deterministic, so the keep set is identical and only the buckets
-  * missing from the manifest are (re)written. At 100 TB label recompute is
-  * the safe default; a deployment that wants to skip it can persist
-  * `labels` as its own table and pass it back via `precomputedLabels`.
+  * missing from the manifest are (re)written.
+  *
+  * `run` always commits its dedup index (`index/bands`, `index/labels/v1`)
+  * after the kept buckets; [[readBands]] and [[readLabels]] are how every
+  * other consumer reads that clustering instead of recomputing it.
   */
 object CuratedPipeline {
 
-  /** Curate an arbitrary corpus into a committed kept-corpus table.
+  /** Curate an arbitrary corpus into a committed kept-corpus table, and
+    * always commit its dedup index (band keys and labels) after it.
     *
     * @param corpus  must carry `idCol` (long, unique), `textCol` (string),
     *                `url` (string) and `warc_ts` (timestamp); all other
     *                columns pass through to the kept table
-    * @param precomputedLabels (id, comp) labels to reuse (e.g. a
-    *                materialized labels table, or the analysis queries'
-    *                session cache) instead of re-clustering
     * @param canonicalCol when set, docs sharing this column's value (a
     *                `<link rel=canonical>` target) cluster together even
     *                with unrelated text — the site-declared dup signal,
@@ -48,29 +48,21 @@ object CuratedPipeline {
       idCol: String = "id", textCol: String = "text",
       numBuckets: Int = 32, snapshotGroups: Int = 4,
       runId: String = "curate",
-      precomputedLabels: Option[DataFrame] = None,
-      canonicalCol: Option[String] = None,
-      persistIndex: Boolean = true): Seq[LineageRow] = {
+      canonicalCol: Option[String] = None): Seq[LineageRow] = {
 
     val done = ExtractPipeline.committedBuckets(outDir)
     val remaining = (0 until numBuckets).filterNot(done)
-    // resume no-op — EXCEPT when the caller wants the index and a prior run
-    // was killed between its last bucket commit and the index write: then
-    // labels recompute (deterministic) and the index still gets committed
-    if (remaining.isEmpty && (!persistIndex || indexState(outDir)._1 >= 1L))
-      return Seq.empty
+    // resume no-op — EXCEPT when a prior run was killed between its last
+    // bucket commit and the index write: then labels recompute
+    // (deterministic) and the index still gets committed
+    if (remaining.isEmpty && indexState(outDir)._1 >= 1L) return Seq.empty
 
     // band keys computed ONCE and shared between the components pass and
     // the persisted index — the index is what curateIncrement probes so a
     // later ingest batch never re-clusters the whole corpus
-    val keyed =
-      if (persistIndex || precomputedLabels.isEmpty)
-        Some(Pin(Dedup.bandKeys(corpus, idCol, textCol, canonicalCol)))
-      else None
-    val labelsRaw = precomputedLabels.getOrElse {
-      val edges = Pin(Dedup.starEdges(keyed.get))
-      Dedup.connectedComponents(keyed.get.select(col("id")).distinct(), edges)
-    }
+    val keyed = Pin(Dedup.bandKeys(corpus, idCol, textCol, canonicalCol))
+    val labelsRaw = Dedup.connectedComponents(keyed.select(col("id")).distinct(),
+      Pin(Dedup.starEdges(keyed)))
     val labels = labelsRaw
       .select(col("id").as("__cid"), col("comp").as("__comp"))
 
@@ -96,8 +88,7 @@ object CuratedPipeline {
     // A kill between the final bucket commit and this write is the one
     // torn state left, and the resume carve-out above recomputes labels
     // (deterministic) and lands here again.
-    if (persistIndex)
-      writeIndex(spark, outDir, keyed.get, labelsRaw, increment = 0L, labelsVersion = 1L)
+    writeIndex(spark, outDir, keyed, labelsRaw, increment = 0L, labelsVersion = 1L)
     lineage
   }
 
@@ -186,8 +177,18 @@ object CuratedPipeline {
     */
   def readLabels(spark: SparkSession, outDir: String): DataFrame = {
     val (v, _) = indexState(outDir)
-    require(v >= 1, s"no curated index at $outDir — run() writes it (persistIndex=true)")
+    require(v >= 1, s"no curated index at $outDir — run() writes it")
     spark.read.parquet(indexLabelsDir(outDir, v))
+  }
+
+  /** Read the committed (id, band) key table — every band key of every
+    * increment, the committed form of `Dedup.bandKeys` over everything
+    * curated so far: what [[curateIncrement]] probes, [[compactIndex]]
+    * folds and the analysis queries read.
+    */
+  def readBands(spark: SparkSession, outDir: String): DataFrame = {
+    require(indexState(outDir)._1 >= 1, s"no curated index at $outDir — run() writes it")
+    spark.read.parquet(indexBandsDir(outDir)).select(col("id"), col("band"))
   }
 
   /** Maintenance for the dedup index (the analog of
@@ -217,8 +218,7 @@ object CuratedPipeline {
     if (incs.size > 1) {
       val target = incs.max
       // checkpoint breaks the self-overwrite cycle (read bands, write bands)
-      val folded = spark.read.parquet(indexBandsDir(outDir))
-        .select(col("id"), col("band")).distinct()
+      val folded = readBands(spark, outDir).distinct()
         .withColumn("increment", lit(target))
         .repartition(1)
         .transform(Pin(_))
@@ -263,8 +263,8 @@ object CuratedPipeline {
     if (batch.isEmpty) return Seq.empty
 
     val (curVersion, incs) = indexState(outDir)
-    require(curVersion >= 1, s"no curated index at $outDir — run() writes it (persistIndex=true)")
-    val storedKeys = spark.read.parquet(indexBandsDir(outDir)).select(col("id"), col("band"))
+    require(curVersion >= 1, s"no curated index at $outDir — run() writes it")
+    val storedKeys = readBands(spark, outDir)
     val storedLabels = spark.read.parquet(indexLabelsDir(outDir, curVersion))
 
     // 1. band-key the batch (the only full pass over the new data)

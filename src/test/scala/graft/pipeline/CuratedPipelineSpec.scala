@@ -559,6 +559,61 @@ class CuratedPipelineSpec extends AnyFunSuite {
     assert(clean.sameElements(torn), "resumed kept corpus must equal clean run")
   }
 
+  test("run commits its dedup index: readLabels ≡ Dedup.clusterLabels, readBands ≡ Dedup.bandKeys") {
+    import spark.implicits._
+    val out = tmpDir()
+    CuratedPipeline.run(spark, corpus(), out, numBuckets = 8, snapshotGroups = 2, runId = "idx")
+    assert(CuratedPipeline.indexState(out) == ((1L, Set(0L))))
+
+    val labels = CuratedPipeline.readLabels(spark, out)
+      .select($"id", $"comp").as[(Long, Long)].collect().sorted
+    val expectLabels = Dedup.clusterLabels(corpus(), "id", "text", None)
+      .select($"id", $"comp").as[(Long, Long)].collect().sorted
+    assert(labels.nonEmpty)
+    assert(labels.sameElements(expectLabels), s"labels ${labels.mkString(",")}")
+
+    val bands = CuratedPipeline.readBands(spark, out).as[(Long, String)].collect().sorted
+    val expectBands = Dedup.bandKeys(corpus(), "id", "text", None)
+      .as[(Long, String)].collect().sorted
+    assert(bands.nonEmpty)
+    assert(bands.sameElements(expectBands))
+  }
+
+  test("a run killed after its last bucket commit but before its index line replays and commits the index") {
+    import spark.implicits._
+    val outClean = tmpDir(); val outTorn = tmpDir()
+    CuratedPipeline.run(spark, corpus400(), outClean,
+      numBuckets = 8, snapshotGroups = 4, runId = "clean")
+
+    CuratedPipeline.run(spark, corpus400(), outTorn,
+      numBuckets = 8, snapshotGroups = 4, runId = "t1")
+    Files.delete(Paths.get(outTorn, "_manifest", "index_manifest.jsonl"))
+    assert(ExtractPipeline.committedBuckets(outTorn) == (0 until 8).toSet)
+    assert(CuratedPipeline.indexState(outTorn) == ((0L, Set.empty[Long])))
+
+    // every bucket is committed, so the replay writes no kept rows
+    val resumed = CuratedPipeline.run(spark, corpus400(), outTorn,
+      numBuckets = 8, snapshotGroups = 4, runId = "t2")
+    assert(resumed.isEmpty)
+    assert(CuratedPipeline.indexState(outTorn) == ((1L, Set(0L))))
+
+    def labels(dir: String) = CuratedPipeline.readLabels(spark, dir)
+      .select($"id", $"comp").as[(Long, Long)].collect().sorted
+    def bands(dir: String) = CuratedPipeline.readBands(spark, dir)
+      .as[(Long, String)].collect().sorted
+    assert(labels(outClean).length == 400)
+    assert(labels(outClean).sameElements(labels(outTorn)))
+    assert(bands(outClean).sameElements(bands(outTorn)))
+    def kept(dir: String) = CuratedPipeline.readKept(spark, dir)
+      .select($"id").as[Long].collect().sorted
+    assert(kept(outClean).sameElements(kept(outTorn)))
+
+    // the index is committed, so the next run is a no-op
+    assert(CuratedPipeline.run(spark, corpus400(), outTorn,
+      numBuckets = 8, snapshotGroups = 4, runId = "t3").isEmpty)
+    assert(CuratedPipeline.indexState(outTorn) == ((1L, Set(0L))))
+  }
+
   /** 400 docs over 8 partitions; docs 300..399 repeat the text of docs
     * 0..99, so dedup drops 100 of them. `reads` counts rows produced.
     */

@@ -34,7 +34,9 @@ class LocalFsSpec extends AnyFunSuite {
       RecordingFile.readAllEvents(dump).asScala.toSeq
         .filter(_.getEventType.getName == "jdk.ProcessStart")
         .map(e => (e.getString("command"),
-          e.getStackTrace.getFrames.asScala.toSeq.map(_.getMethod.getType.getName)))
+          // an event may carry no stack (Spark's `getconf PAGESIZE` probe)
+          Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+            .map(_.getMethod.getType.getName)))
     } finally { rec.close(); Files.delete(dump) }
   }
 
