@@ -206,8 +206,6 @@ object Dedup {
       prev = s
       iter += 2
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged in $iter rounds")
     if (!done)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters rounds")

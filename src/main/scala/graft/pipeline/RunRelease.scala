@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, xxhash64}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The composed RELEASE job, spark-submit-shaped — the full round-5 path
   * a corpus distributor runs: pages → scrubbed+gated curated corpus →
@@ -33,40 +32,20 @@ object RunRelease {
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
 
+    // one gate for the base build and the increment
+    val (gopherGate, scrubPii) = (true, true)
     // base build: first 2/3 of the corpus, PII-scrubbed, Gopher-gated
     val basePages = ExtractStage.generatePages(spark, n * 2 / 3, partitions = cores.toInt * 2)
     CuratedPipeline.runFromPages(spark, basePages, outDir,
       numBuckets = 16, snapshotGroups = 2, runId = "rel-base",
-      scrubPii = true, gopherGate = true)
+      scrubPii = scrubPii, gopherGate = gopherGate)
     val curated = s"$outDir/curated"
 
-    // increment: the remaining third arrives later; rows enter in the same
-    // released (scrubbed) shape and are gated the same way
+    // increment: the remaining third arrives later
     val morePages = ExtractStage.generatePages(spark, n, partitions = cores.toInt * 2)
       .filter(_.url.hashCode % 3 == 0)
-    val committed = ExtractPipeline.readOutput(spark, s"$outDir/extract")
-    val scrub = graft.functions.GraftFunctions.piiScrub(col("extracted_text"))
-    val gop = graft.functions.GraftFunctions.gopherQuality(col("extracted_text"))
-    // already-curated ids (every increment, demoted rows included) make the
-    // increment idempotent: a rerun re-extracts the batch, finds all its
-    // ids already appended, and curates an EMPTY delta — digests stable.
-    // keptRaw (not a raw data/ read): rows survive there across
-    // compactKept AND vacuumKept, so idempotence holds after maintenance
-    val curatedIds = CuratedPipeline.keptRaw(spark, curated).select(col("id"))
-    val batch2 = ExtractStage.run(morePages).toDF()
-      .filter(col("success"))
-      .join(committed.select("url"), Seq("url"), "left_anti")
-      .withColumn("id", xxhash64(col("url")))
-      .join(curatedIds, Seq("id"), "left_anti")
-      .filter(gop.getField("pass"))
-      .withColumn("__scrub", scrub)
-      .withColumn("extracted_text", col("__scrub.clean"))
-      // same released shape as runFromPages(scrubPii = true) rows
-      .withColumn("pii_redactions",
-        col("__scrub.n_emails") + col("__scrub.n_ips") + col("__scrub.n_phones"))
-      .drop("__scrub")
-    CuratedPipeline.curateIncrement(spark, batch2, curated,
-      idCol = "id", textCol = "extracted_text", numBuckets = 16, runId = "rel-inc")
+    increment(spark, morePages, outDir, numBuckets = 16, runId = "rel-inc",
+      gopherGate = gopherGate, scrubPii = scrubPii)
 
     // maintenance: fold base + increment into a fresh compact layout and
     // drop superseded versions (retention guarded by vacuumKept itself)
@@ -79,21 +58,29 @@ object RunRelease {
     val nHead = WetExport.writeRelease(spark, curated, headDir)
     val nBase = WetExport.writeRelease(spark, curated, baseDir, asOfIncrement = Some(0L))
 
-    def releaseDigest(dir: String): String = {
-      val files = new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".warc.wet.gz")).sortBy(_.getName)
-      val h = files.flatMap { f =>
-        graft.core.warc.WarcReader.records(new java.io.FileInputStream(f))
-          .map(r => scala.util.hashing.MurmurHash3.stringHash(
-            r.targetUri + "\u0000" + new String(r.body, java.nio.charset.StandardCharsets.UTF_8)).toLong)
-          .toList
-      }.foldLeft(0L)(_ ^ _)
-      java.lang.Long.toHexString(h).toUpperCase(java.util.Locale.ROOT)
-    }
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"[release] pages=$n kept=${CuratedPipeline.readKept(spark, curated).count()} " +
       f"compactV=$compactV headRecords=$nHead asOf0Records=$nBase " +
-      f"headDigest=${releaseDigest(headDir)} asOf0Digest=${releaseDigest(baseDir)} wall=$sec%.1fs")
+      f"headDigest=${WetExport.digest(headDir)} asOf0Digest=${WetExport.digest(baseDir)} wall=$sec%.1fs")
     spark.stop()
+  }
+
+  /** Fold a later batch of `pages` into the curated corpus under
+    * `outDir` through the base build's own gate: extract, drop urls the
+    * base extract table already holds, [[CuratedPipeline.admit]], scrub
+    * when `scrubPii`, [[CuratedPipeline.fold]]. The rows enter in the
+    * released shape of `runFromPages(scrubPii, gopherGate)`, so passing the
+    * base build's pair makes base + increment equal one build over both.
+    * Idempotent: a rerun folds an empty delta.
+    */
+  def increment(spark: SparkSession, pages: Dataset[Page], outDir: String,
+      numBuckets: Int, runId: String,
+      gopherGate: Boolean, scrubPii: Boolean): Seq[LineageRow] = {
+    val committed = ExtractPipeline.readOutput(spark, s"$outDir/extract").select("url")
+    val admitted = CuratedPipeline.admit(
+      ExtractStage.run(pages).toDF().join(committed, Seq("url"), "left_anti"),
+      gopherGate = gopherGate)
+    CuratedPipeline.fold(spark, if (scrubPii) CuratedPipeline.scrub(admitted) else admitted,
+      s"$outDir/curated", numBuckets, runId)
   }
 }

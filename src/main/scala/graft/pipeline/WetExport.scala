@@ -125,4 +125,21 @@ object WetExport {
     try out.write(manifest.getBytes(UTF_8)) finally out.close()
     stats.map(_.records).sum
   }
+
+  /** Order-independent digest of the WET records under `dir` (XOR of one
+    * MurmurHash3 per record over its target URI and body), as upper-case
+    * hex — what `RunRelease` prints to compare two cuts end to end.
+    */
+  def digest(dir: String): String = {
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".warc.wet.gz"))
+    val h = files.iterator.map { f =>
+      val in = new java.io.FileInputStream(f)
+      try graft.core.warc.WarcReader.records(in)
+        .map(r => scala.util.hashing.MurmurHash3.stringHash(
+          r.targetUri + "\u0000" + new String(r.body, UTF_8)).toLong)
+        .foldLeft(0L)(_ ^ _)
+      finally in.close()
+    }.foldLeft(0L)(_ ^ _)
+    java.lang.Long.toHexString(h).toUpperCase(java.util.Locale.ROOT)
+  }
 }

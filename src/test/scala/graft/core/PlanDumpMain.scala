@@ -163,7 +163,7 @@ object PlanDumpMain {
       val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
         .withColumn("url", concat(lit("doc://"), col("doc_id")))
         .withColumn("warc_ts", lit("2024-03-15 12:00:00").cast("timestamp"))
-      val curDir = Files.createTempDirectory("graft-plandump-cur").toString
+      val curDir = graft.TestDirs.create("graft-plandump-cur").toString
       graft.pipeline.CuratedPipeline.run(spark,
         corpus.filter(pmod(col("doc_id"), lit(2)) === 1), curDir,
         idCol = "doc_id", textCol = "text", numBuckets = 8,
@@ -185,7 +185,7 @@ object PlanDumpMain {
 
     // storage-layer pruning over the committed (bucket(url), days(warc_ts))
     // table: point read prunes to one bucket; day range prunes to its days
-    val out = Files.createTempDirectory("graft-plandump").toString
+    val out = graft.TestDirs.create("graft-plandump").toString
     val pages = graft.pipeline.ExtractStage.generatePages(spark, 400, partitions = 8)
     graft.pipeline.ExtractPipeline.run(spark, pages, out, numBuckets = 16,
       snapshotGroups = 2, runId = "plandump")

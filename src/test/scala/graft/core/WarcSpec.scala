@@ -84,7 +84,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("WarcSource: segment files → Dataset[Page] → extract core end-to-end") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc")
+    val dir = graft.TestDirs.create("graft-warc")
     java.nio.file.Files.write(dir.resolve("seg-00000.warc"), segment())
     java.nio.file.Files.write(dir.resolve("seg-00001.warc.gz"), gzipPerRecord(Seq(
       warcRecord("response", "https://ex.com/c", "2025-06-02T00:00:00Z",
@@ -118,7 +118,7 @@ class WarcSpec extends AnyFunSuite {
       val extracted = graft.pipeline.ExtractStage.run(
         graft.pipeline.ExtractStage.generatePages(spark, 50, partitions = 3))
         .filter(_.success).toDF()
-      val dir = java.nio.file.Files.createTempDirectory("graft-wet").toString
+      val dir = graft.TestDirs.create("graft-wet").toString
       val n = graft.pipeline.WetExport.write(spark, extracted, dir)
       assert(n == extracted.count())
       // read every emitted segment back through the WARC reader
@@ -157,7 +157,7 @@ class WarcSpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     try {
-      import graft.pipeline.{CuratedPipeline, ExtractStage, WetExport, Page}
+      import graft.pipeline.{CuratedPipeline, ExtractStage, RunRelease, WetExport, Page}
       import graft.core.rules.PiiScrubber
       import spark.implicits._
       // plant PII into ~1/4 of the pages' main content so the no-leak
@@ -172,7 +172,7 @@ class WarcSpec extends AnyFunSuite {
             p.text, p.lang)
         } else p
       }
-      val out = java.nio.file.Files.createTempDirectory("graft-wet-rel").toString
+      val out = graft.TestDirs.create("graft-wet-rel").toString
       CuratedPipeline.runFromPages(spark, pages, out,
         numBuckets = 8, snapshotGroups = 2, runId = "rel", scrubPii = true)
       val curated = s"$out/curated"
@@ -180,7 +180,7 @@ class WarcSpec extends AnyFunSuite {
 
       // the release artifact is cut from the KEPT corpus (scrub applied
       // pre-dedup), not from the extract table
-      val relDir = java.nio.file.Files.createTempDirectory("graft-wet-rel-out").toString
+      val relDir = graft.TestDirs.create("graft-wet-rel-out").toString
       val n = WetExport.writeRelease(spark, curated, relDir)
       assert(n == keptN && n > 0)
       val files = new java.io.File(relDir).listFiles()
@@ -230,27 +230,15 @@ class WarcSpec extends AnyFunSuite {
 
       // time travel composes: a release cut AS OF the base increment is
       // byte-identical before and after a later increment lands
-      val rel0a = java.nio.file.Files.createTempDirectory("graft-wet-rel0a").toString
+      val rel0a = graft.TestDirs.create("graft-wet-rel0a").toString
       WetExport.writeRelease(spark, curated, rel0a, asOfIncrement = Some(0L))
       val morePages = ExtractStage.generatePages(spark, 500, partitions = 8)
         .filter(_.url.hashCode % 3 == 0)
-      val gated = graft.pipeline.ExtractPipeline.readOutput(spark, s"$out/extract")
-      import org.apache.spark.sql.functions.{col => c, xxhash64}
-      val scrub = graft.functions.GraftFunctions.piiScrub(c("extracted_text"))
-      val batch2 = ExtractStage.run(morePages).toDF()
-        .filter(c("success"))
-        .join(gated.select("url"), Seq("url"), "left_anti")
-        .withColumn("id", xxhash64(c("url")))
-        // mirror runFromPages(scrubPii = true): the increment's rows enter
-        // the kept table in the same released (redacted) shape
-        .withColumn("__scrub", scrub)
-        .withColumn("extracted_text", c("__scrub.clean"))
-        .withColumn("pii_redactions",
-          c("__scrub.n_emails") + c("__scrub.n_ips") + c("__scrub.n_phones"))
-        .drop("__scrub")
-      CuratedPipeline.curateIncrement(spark, batch2, curated,
-        idCol = "id", textCol = "extracted_text", numBuckets = 8, runId = "rel2")
-      val rel0b = java.nio.file.Files.createTempDirectory("graft-wet-rel0b").toString
+      // the increment's rows pass the base build's own gate (scrubPii
+      // only), so they enter the kept table in the same released shape
+      RunRelease.increment(spark, morePages, out, numBuckets = 8,
+        runId = "rel2", gopherGate = false, scrubPii = true)
+      val rel0b = graft.TestDirs.create("graft-wet-rel0b").toString
       WetExport.writeRelease(spark, curated, rel0b, asOfIncrement = Some(0L))
       def wetTexts(d: String) = new java.io.File(d).listFiles()
         .filter(_.getName.endsWith(".warc.wet.gz")).flatMap { f =>
@@ -260,7 +248,7 @@ class WarcSpec extends AnyFunSuite {
       assert(wetTexts(rel0a) == wetTexts(rel0b),
         "an as-of release must be reproducible after later increments")
       // and the HEAD release now includes the increment's kept rows
-      val relHead = java.nio.file.Files.createTempDirectory("graft-wet-relh").toString
+      val relHead = graft.TestDirs.create("graft-wet-relh").toString
       assert(WetExport.writeRelease(spark, curated, relHead) >= n)
     } finally spark.stop()
   }
@@ -287,8 +275,8 @@ class WarcSpec extends AnyFunSuite {
       val ds = spark.createDataset(pages)(org.apache.spark.sql.Encoders.product[Page])
         .repartition(4)
 
-      val plainDir = java.nio.file.Files.createTempDirectory("graft-warc-plain").toString
-      val dedupDir = java.nio.file.Files.createTempDirectory("graft-warc-dedup").toString
+      val plainDir = graft.TestDirs.create("graft-warc-plain").toString
+      val dedupDir = graft.TestDirs.create("graft-warc-dedup").toString
       WarcWriter.write(spark, ds, plainDir)
       val stats = WarcDedup.writeDeduped(spark, ds, dedupDir)
       assert(stats.responses + stats.revisits == pages.length.toLong)
@@ -379,7 +367,7 @@ class WarcSpec extends AnyFunSuite {
       // the generator corpus covers HTML, PDFs, invalid-UTF-8, and EMPTY
       // payloads — all must survive the crawl format byte-for-byte
       val pages = graft.pipeline.ExtractStage.generatePages(spark, 64, partitions = 3)
-      val dir = java.nio.file.Files.createTempDirectory("graft-warcw").toString
+      val dir = graft.TestDirs.create("graft-warcw").toString
       val n = graft.pipeline.WarcWriter.write(spark, pages, dir)
       assert(n == 64)
       val back = graft.pipeline.WarcSource.readPages(spark, s"$dir/part-*")
@@ -400,8 +388,8 @@ class WarcSpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     try {
-      val landing = java.nio.file.Files.createTempDirectory("graft-warc-landing")
-      val out = java.nio.file.Files.createTempDirectory("graft-warc-table").toString
+      val landing = graft.TestDirs.create("graft-warc-landing")
+      val out = graft.TestDirs.create("graft-warc-table").toString
       def seg(urls: Seq[String]): Array[Byte] = gzipPerRecord(urls.map(u =>
         warcRecord("response", u, "2025-06-02T00:00:00Z", httpResponse(200, "text/html", html1))))
       // first segment lands before the stream starts
@@ -409,7 +397,7 @@ class WarcSpec extends AnyFunSuite {
 
       val pages = graft.pipeline.WarcSource.readPagesStream(spark, landing.toString)
       val q = pages.writeStream
-        .option("checkpointLocation", java.nio.file.Files.createTempDirectory("graft-warc-ck").toString)
+        .option("checkpointLocation", graft.TestDirs.create("graft-warc-ck").toString)
         .foreachBatch((ds: org.apache.spark.sql.Dataset[graft.pipeline.Page], id: Long) =>
           graft.pipeline.StreamingIngest.commitBatch(out, numBuckets = 8)(ds, id))
         .start()

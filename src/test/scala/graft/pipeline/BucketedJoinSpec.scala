@@ -35,7 +35,7 @@ class BucketedJoinSpec extends AnyFunSuite {
 
   test("bucketed tables join with ZERO shuffles; unbucketed same join shuffles both sides") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+    val tmp = graft.TestDirs.create("graft-bucketed").toString
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
     try {
       val pages = ExtractStage.generatePages(spark, 1200, partitions = 8).toDF()

@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-import java.nio.file.Files
 import graft.core.warc.GzipMembers
 
 class CdxSpec extends AnyFunSuite {
@@ -98,8 +97,8 @@ class CdxSpec extends AnyFunSuite {
 
   test("index a written corpus: count, sorted shards, cluster.idx, lookup, fetch") {
     import spark.implicits._
-    val warcDir = Files.createTempDirectory("graft-cdx-warc").toString
-    val idxDir = Files.createTempDirectory("graft-cdx-idx").toString
+    val warcDir = graft.TestDirs.create("graft-cdx-warc").toString
+    val idxDir = graft.TestDirs.create("graft-cdx-idx").toString
     val n = 300L
     val pages = spark.range(0L, n, 1L, 4).map(i => PageGen.page(PageGen.DefaultSeed, i))
     assert(WarcWriter.write(spark, pages, warcDir) == n)
@@ -150,8 +149,8 @@ class CdxSpec extends AnyFunSuite {
 
   test("multi-capture url: both captures indexed, co-located, returned by lookup") {
     import spark.implicits._
-    val warcDir = Files.createTempDirectory("graft-cdx-recap").toString
-    val idxDir = Files.createTempDirectory("graft-cdx-recap-idx").toString
+    val warcDir = graft.TestDirs.create("graft-cdx-recap").toString
+    val idxDir = graft.TestDirs.create("graft-cdx-recap-idx").toString
     // 60 distinct urls, plus url 5 captured a SECOND time (new ts, new body)
     val base = spark.range(0L, 60L, 1L, 2).map(i => PageGen.page(PageGen.DefaultSeed, i))
     val p5 = PageGen.page(PageGen.DefaultSeed, 5L)
@@ -175,8 +174,8 @@ class CdxSpec extends AnyFunSuite {
 
   test("incremental append: new generation only, idempotent, compaction folds") {
     import spark.implicits._
-    val warcDir = Files.createTempDirectory("graft-cdx-inc").toString
-    val idxDir = Files.createTempDirectory("graft-cdx-inc-idx").toString
+    val warcDir = graft.TestDirs.create("graft-cdx-inc").toString
+    val idxDir = graft.TestDirs.create("graft-cdx-inc-idx").toString
     val glob = s"$warcDir/*/part-*"
     def pages(from: Long, until: Long) =
       spark.range(from, until, 1L, 2).map(i => PageGen.page(PageGen.DefaultSeed, i))

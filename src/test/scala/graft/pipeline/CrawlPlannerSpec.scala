@@ -3,7 +3,6 @@ package graft.pipeline
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class CrawlPlannerSpec extends AnyFunSuite {
 
@@ -19,7 +18,7 @@ class CrawlPlannerSpec extends AnyFunSuite {
   test("discover -> consent -> novelty -> politeness composes correctly") {
     import spark.implicits._
     // committed corpus: pages 0..99 of the standard generator
-    val out = Files.createTempDirectory("graft-crawlplan").toString
+    val out = graft.TestDirs.create("graft-crawlplan").toString
     val committed = ExtractStage.generatePages(spark, 100, partitions = 4)
     ExtractPipeline.run(spark, committed, out, numBuckets = 8, snapshotGroups = 2, runId = "cp")
     val committedUrls = committed.toDF().select("url").as[String].collect().toSet
@@ -58,9 +57,9 @@ class CrawlPlannerSpec extends AnyFunSuite {
 
   test("freshness re-crawl: stale captures re-enter the frontier, pass robots, skip novelty") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-recrawl-corpus").toString
-    val warcDir = Files.createTempDirectory("graft-recrawl-warc").toString
-    val idxDir = Files.createTempDirectory("graft-recrawl-idx").toString
+    val out = graft.TestDirs.create("graft-recrawl-corpus").toString
+    val warcDir = graft.TestDirs.create("graft-recrawl-warc").toString
+    val idxDir = graft.TestDirs.create("graft-recrawl-idx").toString
     val host = "site.example"
     def page(u: String, ts: String) = Page(u, java.sql.Timestamp.valueOf(ts),
       s"<html><body>content of $u</body></html>".getBytes("UTF-8"), null, "en")

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -21,7 +21,7 @@ class CuratedPipelineSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-curated-spec").toString
+    graft.TestDirs.create("graft-curated-spec").toString
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
@@ -776,5 +776,130 @@ class CuratedPipelineSpec extends AnyFunSuite {
       .select($"url", $"extracted_text").as[(String, String)].collect().sortBy(_._1)
     assert(keptClean.sameElements(keptT2),
       "extract-stage torn run must converge to the clean kept corpus")
+  }
+
+  // ---- the release increment: RunRelease's base build + later batch -------
+
+  /** RunRelease's two batches at `n` pages: the base 2/3 and the later
+    * pages, which overlap the base the way the job's do.
+    */
+  private def releaseBatches(n: Long): (Dataset[Page], Dataset[Page]) =
+    (ExtractStage.generatePages(spark, n * 2 / 3, partitions = 8),
+      ExtractStage.generatePages(spark, n, partitions = 8).filter(_.url.hashCode % 3 == 0))
+
+  /** The release job's base build, with its gate pair. */
+  private def releaseBase(pages: Dataset[Page], out: String): Unit =
+    CuratedPipeline.runFromPages(spark, pages, out, numBuckets = 8, snapshotGroups = 2,
+      runId = "rel-base", scrubPii = true, gopherGate = true)
+
+  /** The release job's increment, with the same gate pair. */
+  private def releaseIncrement(pages: Dataset[Page], out: String): Unit =
+    RunRelease.increment(spark, pages, out, numBuckets = 8, runId = "rel-inc",
+      gopherGate = true, scrubPii = true)
+
+  private def keptIdText(curated: String): Seq[(Long, String)] = {
+    import spark.implicits._
+    CuratedPipeline.readKept(spark, curated).select($"id", $"extracted_text")
+      .as[(Long, String)].collect().toSeq.sorted
+  }
+
+  test("release increment after runFromPages(base) equals runFromPages(base ∪ rest)") {
+    import spark.implicits._
+    // RunRelease's pinned size: its increment carries a noindex page that
+    // passes the Gopher gate, and canonical groups span both batches
+    val (base, more) = releaseBatches(3000L)
+    val outInc = tmpDir()
+    releaseBase(base, outInc)
+    val laterRows = ExtractStage.run(more).toDF().join(
+      ExtractPipeline.readOutput(spark, s"$outInc/extract").select($"url"), Seq("url"), "left_anti")
+    assert(CuratedPipeline.admit(laterRows, honorNoindex = false, gopherGate = true)
+      .filter($"noindex").count() > 0, "the later batch must carry a noindex page the gate drops")
+    releaseIncrement(more, outInc)
+    val outFull = tmpDir()
+    releaseBase(base.unionByName(more).dropDuplicates("url"), outFull)
+
+    val inc = keptIdText(s"$outInc/curated")
+    assert(inc.nonEmpty)
+    assert(CuratedPipeline.indexState(s"$outInc/curated")._2 == Set(0L, 1L),
+      "the increment must fold as increment 1, not rebuild the corpus")
+    assert(inc == keptIdText(s"$outFull/curated"),
+      "base build + increment must keep exactly what one build over both keeps")
+    def labels(out: String) = CuratedPipeline.readLabels(spark, s"$out/curated")
+      .as[(Long, Long)].collect().toSeq.sorted
+    assert(labels(outInc) == labels(outFull))
+  }
+
+  test("a noindex page in the release increment reaches neither the kept table nor the WET release") {
+    import spark.implicits._
+    val (base, more) = releaseBatches(1500L)
+    // the site owner's opt-out, planted into the head of every other page
+    // of the later batch
+    val noindexMeta = "<meta name=\"robots\" content=\"noindex\">"
+    val planted = more.map { p =>
+      val html = if (p.html == null) "" else new String(p.html, "UTF-8")
+      if (math.floorMod(p.url.hashCode, 2) == 0 && html.contains("</head>"))
+        p.copy(html = html.replaceFirst("</head>", noindexMeta + "</head>").getBytes("UTF-8"))
+      else p
+    }
+    val out = tmpDir()
+    releaseBase(base, out)
+    val noindexUrls = ExtractStage.run(planted).filter($"noindex")
+      .join(ExtractPipeline.readOutput(spark, s"$out/extract").select($"url"), Seq("url"), "left_anti")
+    // the test proves the gate, not absence: some planted pages would
+    // otherwise pass every other gate of the increment
+    assert(CuratedPipeline.admit(noindexUrls.toDF(), honorNoindex = false, gopherGate = true)
+      .count() > 0, "the planted noindex pages must otherwise pass the release gate")
+    releaseIncrement(planted, out)
+    assert(CuratedPipeline.indexState(s"$out/curated")._2.contains(1L))
+
+    val opted = noindexUrls.select($"url").as[String].collect().toSet
+    val keptUrls = CuratedPipeline.readKept(spark, s"$out/curated")
+      .select($"url").as[String].collect().toSet
+    assert(keptUrls.intersect(opted).isEmpty, "noindex pages must not be kept")
+    val rel = tmpDir()
+    WetExport.writeRelease(spark, s"$out/curated", rel)
+    val released = new java.io.File(rel).listFiles()
+      .filter(_.getName.endsWith(".warc.wet.gz")).flatMap { f =>
+        val in = new java.io.FileInputStream(f)
+        try graft.core.warc.WarcReader.records(in).map(_.targetUri).toList finally in.close()
+      }.toSet
+    assert(released == keptUrls)
+    assert(released.intersect(opted).isEmpty, "noindex pages must not be released")
+  }
+
+  test("rerunning the release increment is a no-op, also for a near-dup the index dropped") {
+    import spark.implicits._
+    val (base, more) = releaseBatches(600L)
+    val out = tmpDir()
+    releaseBase(base, out)
+    val curated = s"$out/curated"
+    // a copy of the lowest-id kept doc under a new url whose id is higher:
+    // the increment clusters it with that doc and drops it, so it lands in
+    // the labels table but never in the kept table
+    val (docId, docUrl) = CuratedPipeline.readKept(spark, curated)
+      .join(CuratedPipeline.readLabels(spark, curated), Seq("id"))
+      .select($"id", $"url").as[(Long, String)].collect().min
+    val dupUrl = (0 until 16).map(k => s"$docUrl?copy=$k").toDF("url")
+      .select($"url", xxhash64($"url").as("id")).filter($"id" > docId)
+      .select($"url").as[String].first()
+    val src = base.filter($"url" === docUrl).first()
+    val batch = more.unionByName(Seq(src.copy(url = dupUrl)).toDS())
+
+    releaseIncrement(batch, out)
+    val dupId = Seq(dupUrl).toDF("url").select(xxhash64($"url")).as[Long].first()
+    assert(CuratedPipeline.readLabels(spark, curated)
+      .filter($"id" === dupId).select($"comp").as[Long].collect().toSeq == Seq(docId),
+      "the planted copy must cluster with the doc it copies")
+    assert(CuratedPipeline.readKept(spark, curated).filter($"id" === dupId).isEmpty,
+      "the planted copy must be dropped as a near-dup")
+    val stateBefore = CuratedPipeline.indexState(curated)
+    val keptBefore = keptIdText(curated)
+
+    releaseIncrement(batch, out)
+    assert(CuratedPipeline.indexState(curated) == stateBefore,
+      "a rerun must commit no new index increment")
+    assert(keptIdText(curated) == keptBefore)
+    val labelIds = CuratedPipeline.readLabels(spark, curated).select($"id").as[Long].collect()
+    assert(labelIds.length == labelIds.distinct.length, "no id may appear twice in the labels")
   }
 }

@@ -114,7 +114,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("labels pinned on the durable branch are row-identical to the local labels") {
     import spark.implicits._
-    val cpDir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val cpDir = graft.TestDirs.create("graft-ckpt")
     val sc = spark.sparkContext
     val prev = sc.getCheckpointDir
     sc.setCheckpointDir(cpDir.toString)

@@ -102,13 +102,13 @@ class InvertedIndexSpec extends AnyFunSuite {
       .map(r => (r.getAs[String]("term"), r.getAs[Long]("doc_id"), r.getAs[Long]("tf"))).toSet
 
     // incremental: gen 0 = evens, gen 1 = appended odds
-    val idx = java.nio.file.Files.createTempDirectory("graft-idx").toString
+    val idx = graft.TestDirs.create("graft-idx").toString
     InvertedIndex.append(spark, docs.filter(pmod(col("doc_id"), lit(2)) === 0), idx)
     InvertedIndex.append(spark, docs.filter(pmod(col("doc_id"), lit(2)) === 1), idx)
     assert(InvertedIndex.committedGens(idx) == Seq(0L, 1L))
 
     // one-shot reference index over the full corpus
-    val full = java.nio.file.Files.createTempDirectory("graft-idx-full").toString
+    val full = graft.TestDirs.create("graft-idx-full").toString
     InvertedIndex.append(spark, docs, full)
     assert(pset(InvertedIndex.read(spark, idx)) == pset(InvertedIndex.read(spark, full)))
 

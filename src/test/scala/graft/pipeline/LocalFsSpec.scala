@@ -46,10 +46,10 @@ class LocalFsSpec extends AnyFunSuite {
   test("ExtractPipeline.run starts no child process (no forked chmod); files and dirs keep Hadoop's modes") {
     val pages = ExtractStage.generatePages(spark, 200, partitions = 4)
     // a first run loads the classes and the write path once, outside the recording
-    ExtractPipeline.run(spark, pages, Files.createTempDirectory("graft-fs-warm").toString,
+    ExtractPipeline.run(spark, pages, graft.TestDirs.create("graft-fs-warm").toString,
       numBuckets = 4, snapshotGroups = 2)
 
-    val out = Files.createTempDirectory("graft-fs").toString
+    val out = graft.TestDirs.create("graft-fs").toString
     // Spark's executor-metrics getter (ProcfsMetricsGetter) forks
     // `getconf PAGESIZE` once per JVM, at the first heartbeat, which may
     // fall inside the recording

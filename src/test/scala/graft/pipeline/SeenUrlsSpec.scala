@@ -18,7 +18,7 @@ class SeenUrlsSpec extends AnyFunSuite {
 
   test("bloom-routed frontier check equals the plain anti-join exactly") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-seen").toString
+    val out = graft.TestDirs.create("graft-seen").toString
     // commit 600 pages, then present a batch of 1000 (600 re-crawls + 400 new)
     val committed = ExtractStage.generatePages(spark, 600, partitions = 8)
     ExtractPipeline.run(spark, committed, out, numBuckets = 8, snapshotGroups = 2, runId = "seen")
@@ -53,7 +53,7 @@ class SeenUrlsSpec extends AnyFunSuite {
 
   test("a filter built before the latest commit is stale: load refuses it, filterNew rebuilds") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-seen-stale").toString
+    val out = graft.TestDirs.create("graft-seen-stale").toString
     val pages = ExtractStage.generatePages(spark, 600, partitions = 8)
     ExtractPipeline.run(spark, pages, out, numBuckets = 8, snapshotGroups = 2, runId = "s")
     val mf = java.nio.file.Paths.get(out, "_manifest", "manifest.jsonl")
@@ -97,9 +97,9 @@ class SeenUrlsSpec extends AnyFunSuite {
 
   test("CDX-routed confirmation equals the plain anti-join (point probes, no corpus scan)") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-seen-cdx").toString
-    val warcDir = Files.createTempDirectory("graft-seen-warc").toString
-    val idxDir = Files.createTempDirectory("graft-seen-idx").toString
+    val out = graft.TestDirs.create("graft-seen-cdx").toString
+    val warcDir = graft.TestDirs.create("graft-seen-warc").toString
+    val idxDir = graft.TestDirs.create("graft-seen-idx").toString
     val committed = ExtractStage.generatePages(spark, 600, partitions = 8)
     ExtractPipeline.run(spark, committed, out, numBuckets = 8, snapshotGroups = 2, runId = "c")
     // the corpus's own WARC segments → its CDX index (same url universe),
@@ -134,8 +134,8 @@ class SeenUrlsSpec extends AnyFunSuite {
     assert(viaStaleCdx == viaAntiJoin2,
       "a stale CDX index must fall back to the anti-join, not decide")
     // re-index + re-declare → the point-probe path is trusted again
-    val warcDir2 = Files.createTempDirectory("graft-seen-warc2").toString
-    val idxDir2 = Files.createTempDirectory("graft-seen-idx2").toString
+    val warcDir2 = graft.TestDirs.create("graft-seen-warc2").toString
+    val idxDir2 = graft.TestDirs.create("graft-seen-idx2").toString
     WarcWriter.write(spark, ExtractStage.generatePages(spark, 600, partitions = 8)
       .union(more), warcDir2)
     CdxIndex.build(spark, s"$warcDir2/part-*", idxDir2, shards = 4)

@@ -17,7 +17,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def tmp(): String = Files.createTempDirectory("graft-si").toString
+  private def tmp(): String = graft.TestDirs.create("graft-si").toString
 
   test("streaming ingest commits micro-batches exactly once into the bucketed layout") {
     import spark.implicits._
