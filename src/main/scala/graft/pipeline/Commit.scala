@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import org.apache.spark.rdd.PartitionPruningRDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
@@ -26,6 +26,12 @@ import scala.reflect.ClassTag
   * manifest ([[ExtractPipeline.committedBuckets]]) and leaves committed
   * buckets out of the next call. Lineage is one row per committed bucket,
   * with `partition_id` = the bucket id.
+  *
+  * Versioned fold. A table that grows one top-level `<prefix>=<k>`
+  * partition per write under `dir/data` (the stream extract table's
+  * `ingest_batch`, the kept table's `curate_inc`) is folded, read and
+  * vacuumed by [[fold]], [[readFolded]] and [[vacuum]]; see the note
+  * above them.
   */
 object Commit {
 
@@ -123,6 +129,116 @@ object Commit {
     }
   }
 
+  // ---- versioned fold -----------------------------------------------------
+  //
+  // A table that gains one `dir/data/<prefix>=<k>` prefix per write (×
+  // buckets × days) opens ever more small directories per read. [[fold]]
+  // collapses the committed prefixes into one versioned plain layout
+  //   dir/compact/v<N>/part_bucket=<b>/warc_day=<d>/…  (≈1 file each)
+  // where the prefix becomes a data column, so every row keeps its
+  // provenance, and commits the fold by appending
+  // {"version":N,"folded":[k…]} to `_manifest/compact_manifest.jsonl`
+  // AFTER the write: the Iceberg snapshot pattern. A fold killed before
+  // its line is invisible, and its replay rewrites the same version
+  // directory. Only the prefixes the caller names as committed are ever
+  // read or folded: a torn write's files are on disk but invisible, as a
+  // whole, until its own commit lands. Readers see compact v<current> ∪
+  // committed unfolded prefixes, so every committed row is visible exactly
+  // once at every point. Single maintenance writer assumed (as with
+  // Iceberg's rewrite_data_files and expire_snapshots).
+
+  private final case class FoldState(version: Long, folded: Set[Long])
+
+  private def foldState(dir: String): FoldState = {
+    val ls = lines(manifest(dir, "compact_manifest.jsonl"))
+    FoldState((0L +: ls.flatMap(longField(_, "version"))).max,
+      ls.flatMap(longsField(_, "folded")).toSet)
+  }
+
+  private def compactDir(dir: String, v: Long) = s"$dir/compact/v$v"
+
+  private def fsOf(spark: SparkSession, path: String) =
+    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The prefixes `ks` whose `root/<prefix>=<k>` directory holds a
+    * parquet file, sorted: a rows-less prefix has nothing to read and would
+    * fail schema inference.
+    */
+  private def withRows(spark: SparkSession, root: String, prefix: String,
+      ks: Set[Long]): Seq[Long] = {
+    val fs = fsOf(spark, root)
+    ks.toSeq.sorted.filter { k =>
+      val path = new org.apache.hadoop.fs.Path(s"$root/$prefix=$k")
+      fs.exists(path) && {
+        val files = fs.listFiles(path, true)
+        var found = false
+        while (!found && files.hasNext) found = files.next().getPath.getName.endsWith(".parquet")
+        found
+      }
+    }
+  }
+
+  /** Rows of the prefixes `ks` of the table at `root` that hold rows;
+    * None when none does. Only those prefix directories are listed, and the
+    * prefix column reads as a long (partition-dir inference narrows it to
+    * int; the compact layout stores it as a long data column).
+    */
+  def readPrefixes(spark: SparkSession, root: String, prefix: String,
+      ks: Set[Long]): Option[DataFrame] = {
+    val live = withRows(spark, root, prefix, ks)
+    if (live.isEmpty) None
+    else Some(spark.read.option("basePath", root)
+      .parquet(live.map(k => s"$root/$prefix=$k"): _*)
+      .withColumn(prefix, col(prefix).cast("long")))
+  }
+
+  /** The table's committed rows: compact v<current> ∪ the `committed`
+    * prefixes not folded into it; None when there are none.
+    */
+  def readFolded(spark: SparkSession, dir: String, prefix: String,
+      committed: Set[Long]): Option[DataFrame] = {
+    val st = foldState(dir)
+    val compacted =
+      if (st.version == 0L) None
+      else Some(spark.read.parquet(compactDir(dir, st.version)))
+    (compacted ++ readPrefixes(spark, s"$dir/data", prefix, committed -- st.folded))
+      .reduceOption(_ unionByName _)
+  }
+
+  /** Fold the `committed` prefixes not yet folded that hold rows into
+    * compact v<N+1>, one bucket per write task, and commit the fold.
+    * @return the new version, or the current one when nothing is to fold
+    */
+  def fold(spark: SparkSession, dir: String, prefix: String, committed: Set[Long],
+      numBuckets: Int): Long = {
+    val st = foldState(dir)
+    val todo = withRows(spark, s"$dir/data", prefix, committed -- st.folded)
+    if (todo.isEmpty) return st.version
+    val next = st.version + 1
+    write(readFolded(spark, dir, prefix, committed).get
+      .repartitionById(numBuckets, col("part_bucket")),
+      compactDir(dir, next), "part_bucket", "warc_day")
+    appendLine(manifest(dir, "compact_manifest.jsonl"),
+      s"""{"version":$next,"folded":[${(st.folded ++ todo).toSeq.sorted.mkString(",")}]}""")
+    next
+  }
+
+  /** Delete folded prefixes and compact versions older than the current
+    * one. Lossless: every folded row lives on in the current version. Run
+    * only when no reader is mid-query.
+    */
+  def vacuum(spark: SparkSession, dir: String, prefix: String): Unit = {
+    val st = foldState(dir)
+    st.folded.foreach(k => delete(spark, s"$dir/data/$prefix=$k"))
+    (1L until st.version).foreach(v => delete(spark, compactDir(dir, v)))
+  }
+
+  /** Recursively delete `path` through its Hadoop FileSystem; a missing
+    * path is a no-op.
+    */
+  def delete(spark: SparkSession, path: String): Unit =
+    fsOf(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
+
   // ---- JSONL manifests ----------------------------------------------------
 
   /** `outDir/_manifest/<name>`, where every table keeps its manifests. */
@@ -133,6 +249,17 @@ object Commit {
     Files.createDirectories(manifest.getParent)
     Files.write(manifest, (json + "\n").getBytes("UTF-8"),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+  }
+
+  /** Replace a manifest's content with `lines` in one atomic step: a
+    * reader or a crash sees the old content or the new, never a torn one.
+    */
+  def rewrite(manifest: Path, lines: Seq[String]): Unit = {
+    Files.createDirectories(manifest.getParent)
+    val tmp = manifest.resolveSibling(s".${manifest.getFileName}.tmp")
+    Files.write(tmp, lines.map(_ + "\n").mkString.getBytes("UTF-8"))
+    Files.move(tmp, manifest, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** A manifest's non-empty lines; none when it does not exist. */

@@ -187,8 +187,12 @@ object CuratedPipeline {
     * folds and the analysis queries read.
     */
   def readBands(spark: SparkSession, outDir: String): DataFrame = {
-    require(indexState(outDir)._1 >= 1, s"no curated index at $outDir — run() writes it")
-    spark.read.parquet(indexBandsDir(outDir)).select(col("id"), col("band"))
+    val (v, incs) = indexState(outDir)
+    require(v >= 1, s"no curated index at $outDir — run() writes it")
+    // committed increments only, like every read of a curated table
+    Commit.readPrefixes(spark, indexBandsDir(outDir), "increment", incs)
+      .getOrElse(spark.range(0).select(col("id"), lit("").as("band")))
+      .select(col("id"), col("band"))
   }
 
   /** Maintenance for the dedup index (the analog of
@@ -213,8 +217,6 @@ object CuratedPipeline {
     require(keepLabelVersions >= 1, "must retain at least the current labels version")
     val (v, incs) = indexState(outDir)
     require(v >= 1, s"no curated index at $outDir")
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (incs.size > 1) {
       val target = incs.max
       // checkpoint breaks the self-overwrite cycle (read bands, write bands)
@@ -223,14 +225,11 @@ object CuratedPipeline {
         .repartition(1)
         .transform(Pin(_))
       Commit.write(folded, indexBandsDir(outDir), "increment")
-      incs.filter(_ != target).foreach { k =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"${indexBandsDir(outDir)}/increment=$k"), true)
-      }
+      incs.filter(_ != target)
+        .foreach(k => Commit.delete(spark, s"${indexBandsDir(outDir)}/increment=$k"))
     }
-    (1L until math.max(1L, v - (keepLabelVersions - 1))).foreach { old =>
-      fs.delete(new org.apache.hadoop.fs.Path(indexLabelsDir(outDir, old)), true)
-    }
+    (1L until math.max(1L, v - (keepLabelVersions - 1)))
+      .foreach(old => Commit.delete(spark, indexLabelsDir(outDir, old)))
   }
 
   /** Curate a NEW batch against an existing curated corpus by probing the
@@ -559,76 +558,35 @@ object CuratedPipeline {
   // The kept corpus is the pipeline's highest-value table, and without
   // maintenance it is the only one whose partition count grows without
   // bound: every curateIncrement adds a permanent curate_inc=<k> top-level
-  // prefix (× buckets × days). compactKept applies to it the same
-  // versioned-fold protocol StreamingIngest.compact applies to ingest
-  // batches: fold committed increments into data_compact/v<N> (curate_inc
-  // becomes a DATA column there, so the directory count collapses to
-  // buckets × days while every row keeps its provenance), commit the fold
-  // with one manifest line, vacuum superseded directories separately.
-  // Demotions are never applied physically — the delete table is KBs and
-  // riding it as a broadcast anti-join is what keeps BOTH the increment
-  // write path pure-append AND readKeptAsOf exact across a fold.
+  // prefix (× buckets × days). The table is folded, read and vacuumed
+  // through Commit's versioned fold, with curate_inc as its prefix and the
+  // increments of the index manifest as its committed set: curate_inc
+  // becomes a DATA column in the folded layout, so the directory count
+  // collapses to buckets × days while every row keeps its provenance.
+  // Every read sees committed increments only, deletes included, so an
+  // increment killed before its index line is invisible as a whole and its
+  // replay curates the same batch again. Demotions are never applied
+  // physically — the delete table is KBs and riding it as a broadcast
+  // anti-join is what keeps BOTH the increment write path pure-append AND
+  // readKeptAsOf exact across a fold.
 
   private def demotedDir(outDir: String) = s"$outDir/index/demoted"
-  private def compactDataDir(outDir: String, v: Long) = s"$outDir/data_compact/v$v"
 
   /** The logical-delete table: (id, increment) for every canonical demoted
-    * by a later increment's bridge/undercut — the rare-path remap output,
-    * KBs per batch, applied by readers as a broadcast anti-join.
+    * by a committed increment's bridge/undercut — the rare-path remap
+    * output, KBs per batch, applied by readers as a broadcast anti-join.
     */
-  def readDemoted(spark: SparkSession, outDir: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(demotedDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a demotion-free increment leaves only _SUCCESS behind — no
-    // increment=<k> partition to infer a schema from
-    val hasParts = fs.exists(dir) && fs.listStatus(dir)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith("increment="))
-    if (!hasParts)
-      spark.range(0).select(col("id"), lit(0L).as("increment"))
-    else
-      spark.read.parquet(demotedDir(outDir))
-        // partition-dir inference narrows increment to int; pin to long
-        .withColumn("increment", col("increment").cast("long"))
-  }
-
-  private final case class KeptCompactState(version: Long, folded: Set[Long])
-
-  private def keptCompactState(outDir: String): KeptCompactState = {
-    val lines = Commit.lines(Commit.manifest(outDir, "kept_compact_manifest.jsonl"))
-    KeptCompactState((0L +: lines.flatMap(Commit.longField(_, "version"))).max,
-      lines.flatMap(Commit.longsField(_, "incs")).toSet)
-  }
+  def readDemoted(spark: SparkSession, outDir: String): DataFrame =
+    // a demotion-free increment leaves no increment=<k> partition
+    Commit.readPrefixes(spark, demotedDir(outDir), "increment", indexState(outDir)._2)
+      .getOrElse(spark.range(0).select(col("id"), lit(0L).as("increment")))
 
   /** Raw committed kept rows, deletes NOT applied: current compact version
-    * ∪ increment prefixes committed after the fold. Every row visible
-    * exactly once at every point (the StreamingIngest.readAll discipline).
+    * ∪ committed increment prefixes not folded into it.
     */
-  private[pipeline] def keptRaw(spark: SparkSession, outDir: String): DataFrame = {
-    val st = keptCompactState(outDir)
-    if (st.version == 0L) return spark.read.parquet(s"$outDir/data")
-    val compacted = spark.read.parquet(compactDataDir(outDir, st.version))
-      .withColumn("curate_inc", col("curate_inc").cast("int"))
-    val dataDir = new org.apache.hadoop.fs.Path(s"$outDir/data")
-    val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val liveIncs =
-      if (!fs.exists(dataDir)) Seq.empty[Long]
-      else fs.listStatus(dataDir).toSeq.filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("curate_inc="))
-        .map(_.stripPrefix("curate_inc=").toLong)
-        .filterNot(st.folded)
-        // same guard as compactKept: a rows-less prefix (torn write) has
-        // nothing to read and would fail schema inference on the
-        // data/ scan when it is the only live prefix
-        .filter { k =>
-          Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-            s"$outDir/data/curate_inc=$k/*/*/*.parquet"))).exists(_.nonEmpty)
-        }
-    if (liveIncs.isEmpty) compacted
-    else compacted.unionByName(
-      spark.read.parquet(s"$outDir/data")
-        .filter(col("curate_inc").isin(liveIncs.map(java.lang.Long.valueOf): _*))
-        .select(compacted.columns.map(col): _*))
-  }
+  private[pipeline] def keptRaw(spark: SparkSession, outDir: String): DataFrame =
+    Commit.readFolded(spark, outDir, "curate_inc", indexState(outDir)._2).getOrElse(
+      throw new IllegalStateException(s"no committed kept rows at $outDir"))
 
   /** Read the committed kept corpus: base/compact layout ∪ live increment
     * prefixes, with the logical-delete table applied as a broadcast
@@ -642,53 +600,17 @@ object CuratedPipeline {
   }
 
   /** Fold every committed `curate_inc=<k>` increment prefix into one
-    * versioned base layout `data_compact/v<N>` (≈1 file per bucket × day
-    * instead of increments × buckets × days). Crash-safe without locking:
-    * the fold writes a FRESH version directory and the single appended
-    * manifest line is the commit point — a killed fold leaves an orphan
-    * directory that a replay overwrites (deterministic version number).
-    * Rows keep their `curate_inc` (as a data column) and the delete table
-    * is never applied physically, so [[readKeptAsOf]] still reconstructs
-    * any increment's view across the fold. Torn (uncommitted) increments
-    * are excluded — their replay re-appends them after the fold. Single
-    * maintenance writer assumed, like every compaction here.
+    * versioned base layout (≈1 file per bucket × day instead of
+    * increments × buckets × days). Rows keep their `curate_inc` (as a data
+    * column) and the delete table is never applied physically, so
+    * [[readKeptAsOf]] still reconstructs any increment's view across the
+    * fold. Torn (uncommitted) increments are excluded — their replay
+    * re-appends them after the fold.
     * @param numBuckets the table's bucket count (one bucket per write task)
     * @return the new compact version (current version if nothing to fold)
     */
-  def compactKept(spark: SparkSession, outDir: String, numBuckets: Int = 32): Long = {
-    val st = keptCompactState(outDir)
-    val committedIncs = {
-      val (v, incs) = indexState(outDir)
-      if (v == 0L) Set(0L) else incs // index-less tables have only the base build
-    }
-    // fold only prefixes that actually carry parquet files: a rows-less
-    // prefix (torn write, or a legacy empty increment) would fail schema
-    // inference on the data/ read — and there is nothing to fold anyway
-    val dataFs = new org.apache.hadoop.fs.Path(s"$outDir/data")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val todo = (committedIncs -- st.folded).toSeq.sorted.filter { k =>
-      Option(dataFs.globStatus(new org.apache.hadoop.fs.Path(
-        s"$outDir/data/curate_inc=$k/*/*/*.parquet"))).exists(_.nonEmpty)
-    }
-    if (todo.isEmpty) return st.version
-    val prev =
-      if (st.version == 0L) None
-      else Some(spark.read.parquet(compactDataDir(outDir, st.version))
-        .withColumn("curate_inc", col("curate_inc").cast("int")))
-    val newRows = spark.read.parquet(s"$outDir/data")
-      .filter(col("curate_inc").isin(todo.map(java.lang.Long.valueOf): _*))
-      .withColumn("curate_inc", col("curate_inc").cast("int"))
-    val union = prev
-      .map(p => p.unionByName(newRows.select(p.columns.map(col): _*)))
-      .getOrElse(newRows)
-      // one bucket per task: ≈1 file per bucket × day
-      .repartitionById(numBuckets, col("part_bucket"))
-    val next = st.version + 1
-    Commit.write(union, compactDataDir(outDir, next), "part_bucket", "warc_day")
-    Commit.appendLine(Commit.manifest(outDir, "kept_compact_manifest.jsonl"),
-      s"""{"version":$next,"incs":[${(st.folded ++ todo).toSeq.sorted.mkString(",")}]}""")
-    next
-  }
+  def compactKept(spark: SparkSession, outDir: String, numBuckets: Int = 32): Long =
+    Commit.fold(spark, outDir, "curate_inc", indexState(outDir)._2, numBuckets)
 
   /** Delete kept-table directories superseded by [[compactKept]]: folded
     * `curate_inc=<k>` prefixes and compact versions older than current.
@@ -697,18 +619,8 @@ object CuratedPipeline {
     * delete table, both retained. Run only when no reader is mid-query
     * (single-writer maintenance, the expire_snapshots caveat).
     */
-  def vacuumKept(spark: SparkSession, outDir: String): Unit = {
-    val st = keptCompactState(outDir)
-    if (st.version == 0L) return
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    st.folded.foreach { k =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/data/curate_inc=$k"), true)
-    }
-    (1L until st.version).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(compactDataDir(outDir, v)), true)
-    }
-  }
+  def vacuumKept(spark: SparkSession, outDir: String): Unit =
+    Commit.vacuum(spark, outDir, "curate_inc")
 
   /** Committed (increment, labels_version) pairs in commit order — the
     * curated table's snapshot history. One snapshot per increment; the

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Per-partition lineage row (SURVEY.md §7.5 / FIXTURES.md §3). In the
   * extract table one task writes one bucket, and `partition_id` is that
@@ -61,9 +60,9 @@ object ExtractPipeline {
     * history on every resume). Per-snapshot lineage lines are moved to
     * `manifest_archive.jsonl` (append-only, nothing is lost — the same
     * trade as Iceberg's expire_snapshots: current state stays one read,
-    * history moves to the archive). The rewrite goes through a temp file +
-    * atomic move, so a reader/crash mid-compaction sees either the old or
-    * the new manifest, never a torn one. Single maintenance writer
+    * history moves to the archive). The rewrite is [[Commit.rewrite]], so a
+    * reader/crash mid-compaction sees either the old or the new manifest,
+    * never a torn one. Single maintenance writer
     * assumed (like every compaction here): a snapshot APPENDED between
     * this function's read and its move would be lost — do not run it
     * concurrently with an active extract job on the same table.
@@ -76,11 +75,8 @@ object ExtractPipeline {
     if (lines.size <= 1) return 0
     val buckets = committedBuckets(outDir).toSeq.sorted
     Commit.appendLine(mf.resolveSibling("manifest_archive.jsonl"), lines.mkString("\n"))
-    val line = s"""{"run_id":"manifest-compact","snapshot_id":"compact","buckets":[${buckets.mkString(",")}],"lineage":[]}""" + "\n"
-    val tmp = mf.resolveSibling("manifest.jsonl.tmp")
-    Files.write(tmp, line.getBytes("UTF-8"))
-    Files.move(tmp, mf, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Commit.rewrite(mf, Seq(
+      s"""{"run_id":"manifest-compact","snapshot_id":"compact","buckets":[${buckets.mkString(",")}],"lineage":[]}"""))
     lines.size
   }
 

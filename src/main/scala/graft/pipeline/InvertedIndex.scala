@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 
 /** Inverted-index retrieval over the corpus — the lexical complement of
   * the embedding ANN path (q34/q35/q48): build term postings once, then
@@ -216,11 +216,7 @@ object InvertedIndex {
     // stats are additive under the disjoint-append contract — the fold's
     // manifest line is pure arithmetic, no recount
     val (nDocs, totalDl) = (meta.map(_.nDocs).sum, meta.map(_.totalDl).sum)
-    val tmp = Paths.get(idxDir, s".index_manifest.tmp$g")
-    Files.write(tmp,
-      (s"""{"gen":$g,"n_docs":$nDocs,"total_dl":$totalDl}""" + "\n").getBytes("UTF-8"))
-    Files.move(tmp, manifest(idxDir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Commit.rewrite(manifest(idxDir), Seq(s"""{"gen":$g,"n_docs":$nDocs,"total_dl":$totalDl}"""))
     vacuum(spark, idxDir)
   }
 
@@ -230,15 +226,9 @@ object InvertedIndex {
   def vacuum(spark: SparkSession, idxDir: String): Unit = {
     val gens = committedGens(idxDir)
     val live = gens.map(g => s"g$g").toSet ++ gens.map(g => s"l$g").toSet
-    val dir = Paths.get(idxDir)
-    if (!Files.exists(dir)) return
-    import scala.jdk.CollectionConverters._
-    Files.list(dir).iterator().asScala
-      .filter(p => p.getFileName.toString.matches("[gl]\\d+") &&
-        !live.contains(p.getFileName.toString))
-      .foreach { p =>
-        Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      }
+    Option(new java.io.File(idxDir).list()).toSeq.flatten
+      .filter(name => name.matches("[gl]\\d+") && !live.contains(name))
+      .foreach(name => Commit.delete(spark, s"$idxDir/$name"))
   }
 
   /** Top-k docs per query. `queries` carries (`qid`, `term`) rows — a

@@ -2,8 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** Continuous ingestion into the committed extract table: a Structured
   * Streaming source of pages → the extract stage → `foreachBatch` commits
@@ -26,9 +24,8 @@ import scala.jdk.CollectionConverters._
   *
   * Bucket/day pruning still applies under the batch prefix: partition
   * pruning composes across levels, so a point read scans
-  * (#batches × 1 bucket) directories, and compaction (collapsing old
-  * batch prefixes into the plain layout via the batch pipeline) is the
-  * standard follow-up at scale.
+  * (#batches × 1 bucket) directories, and [[compact]] folds committed
+  * batch prefixes into one plain layout.
   */
 object StreamingIngest {
 
@@ -109,115 +106,42 @@ object StreamingIngest {
       .start()
 
   /** Read the streaming-committed table (only manifest-committed batches —
-    * a torn batch's files exist but aren't query-consistent yet).
+    * a torn batch's files exist but aren't query-consistent yet), straight
+    * from the batch prefixes; `ingest_batch` reads as long on every path
+    * (raw, compact and the empty table).
     */
-  def readCommitted(spark: org.apache.spark.sql.SparkSession, outDir: String): DataFrame = {
-    val committed = committedBatches(outDir).toSeq
-    if (committed.isEmpty || !Files.exists(Paths.get(outDir, "data")))
-      return emptyTable(spark)
-    spark.read.parquet(s"$outDir/data")
-      .filter(col("ingest_batch").isin(committed.map(java.lang.Long.valueOf): _*))
-      // partition-dir inference narrows ingest_batch to int; pin it to
-      // long so every read path (raw, compact — where it is a DATA column
-      // and therefore long — and the empty table) exposes ONE schema
-      .withColumn("ingest_batch", col("ingest_batch").cast("long"))
-  }
+  def readCommitted(spark: org.apache.spark.sql.SparkSession, outDir: String): DataFrame =
+    Commit.readPrefixes(spark, s"$outDir/data", "ingest_batch", committedBatches(outDir))
+      .getOrElse(emptyTable(spark))
 
   // ---- compaction ---------------------------------------------------------
   //
   // Continuous ingestion accretes an ingest_batch=B prefix per micro-batch:
   // after a day of 1-minute batches a point read prunes to one bucket but
-  // still opens 1440 batch directories of small files. Compaction folds
-  // committed batches into a VERSIONED plain (part_bucket, warc_day) layout:
-  //   compact/v<N>/part_bucket=<b>/warc_day=<d>/…  (≈1 file per partition)
-  // and commits the fold by appending {version, batches} to
-  // compact_manifest.jsonl AFTER the write — the Iceberg snapshot pattern
-  // again. Readers (`readAll`) see compact v<current> ∪ committed batches
-  // not yet folded, so every row is visible exactly once at every point;
-  // a compaction killed before its manifest line is invisible and a replay
-  // rewrites the same deterministic version directory. Single maintenance
-  // writer assumed (as with Iceberg's rewrite_data_files).
-
-  private final case class CompactState(version: Long, folded: Set[Long])
-
-  private def compactState(outDir: String): CompactState = {
-    val lines = Commit.lines(Commit.manifest(outDir, "compact_manifest.jsonl"))
-    CompactState((0L +: lines.flatMap(Commit.longField(_, "version"))).max,
-      lines.flatMap(Commit.longsField(_, "batches")).toSet)
-  }
+  // still opens 1440 batch directories of small files. The table is folded,
+  // read and vacuumed through Commit's versioned fold, with ingest_batch as
+  // its prefix and the manifest-committed batches as its committed set.
 
   /** Fold all committed-but-unfolded batches into the next compact version,
     * one bucket per write task (`numBuckets` = the table's bucket count).
     * Returns the new version, or the current one if nothing to fold.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, outDir: String,
-      numBuckets: Int = 32): Long = {
-    val st = compactState(outDir)
-    val todo = (committedBatches(outDir) -- st.folded).toSeq.sorted
-    if (todo.isEmpty) return st.version
-    val newRows = spark.read.parquet(s"$outDir/data")
-      .filter(col("ingest_batch").isin(todo.map(java.lang.Long.valueOf): _*))
-      // ingest_batch becomes a DATA column in the compact layout: pin it
-      // to long before writing so compact files always agree with the
-      // normalized read schema
-      .withColumn("ingest_batch", col("ingest_batch").cast("long"))
-    val prev =
-      if (st.version == 0L) None
-      else Some(spark.read.parquet(s"$outDir/compact/v${st.version}"))
-    // (ingest_batch, url) is the row identity → the fold is idempotent even
-    // if a crashed run half-wrote this version before the replay
-    val union = prev.map(_.unionByName(newRows)).getOrElse(newRows)
-      .dropDuplicates("ingest_batch", "url")
-      // one bucket per task: ≈1 file per bucket dir
-      .repartitionById(numBuckets, col("part_bucket"))
-    val next = st.version + 1
-    Commit.write(union, s"$outDir/compact/v$next", "part_bucket", "warc_day")
-    Commit.appendLine(Commit.manifest(outDir, "compact_manifest.jsonl"),
-      s"""{"version":$next,"batches":[${(st.folded ++ todo).toSeq.sorted.mkString(",")}]}""")
-    next
-  }
+      numBuckets: Int = 32): Long =
+    Commit.fold(spark, outDir, "ingest_batch", committedBatches(outDir), numBuckets)
 
   /** Unified read: current compact version ∪ committed-but-unfolded batches.
     * Every committed row is visible exactly once regardless of how much has
     * been compacted.
     */
-  def readAll(spark: org.apache.spark.sql.SparkSession, outDir: String): DataFrame = {
-    val st = compactState(outDir)
-    val live = (committedBatches(outDir) -- st.folded).toSeq
-    if (st.version == 0L) readCommitted(spark, outDir)
-    else {
-      val compactDf = spark.read.parquet(s"$outDir/compact/v${st.version}")
-        .withColumn("ingest_batch", col("ingest_batch").cast("long"))
-      if (live.isEmpty) compactDf // raw dirs may already be vacuumed
-      else {
-        val liveDf = spark.read.parquet(s"$outDir/data")
-          .filter(col("ingest_batch").isin(live.map(java.lang.Long.valueOf): _*))
-          .withColumn("ingest_batch", col("ingest_batch").cast("long"))
-        compactDf.unionByName(liveDf.select(compactDf.columns.map(col): _*))
-      }
-    }
-  }
+  def readAll(spark: org.apache.spark.sql.SparkSession, outDir: String): DataFrame =
+    Commit.readFolded(spark, outDir, "ingest_batch", committedBatches(outDir))
+      .getOrElse(emptyTable(spark))
 
   /** Delete raw batch directories already folded and compact versions older
     * than current. Run only when no reader is mid-query (single-writer
     * maintenance, same caveat as Iceberg's expire_snapshots).
     */
-  def vacuum(outDir: String): Unit = {
-    val st = compactState(outDir)
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => Files.delete(f))
-      }
-    st.folded.foreach { b =>
-      rmTree(Paths.get(outDir, "data", s"ingest_batch=$b"))
-    }
-    val compactRoot = Paths.get(outDir, "compact")
-    if (Files.exists(compactRoot)) {
-      Files.list(compactRoot).iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("v") &&
-          p.getFileName.toString.drop(1).toLongOption.exists(_ < st.version))
-        .foreach(rmTree)
-    }
-  }
+  def vacuum(spark: org.apache.spark.sql.SparkSession, outDir: String): Unit =
+    Commit.vacuum(spark, outDir, "ingest_batch")
 }

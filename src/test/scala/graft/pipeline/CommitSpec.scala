@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class CommitSpec extends AnyFunSuite {
 
@@ -20,10 +21,35 @@ class CommitSpec extends AnyFunSuite {
   }
 
   test("appendLine creates the manifest and appends one line per call") {
-    val mf = Commit.manifest(Files.createTempDirectory("graft-commit").toString, "m.jsonl")
+    val mf = Commit.manifest(graft.TestDirs.create("graft-commit").toString, "m.jsonl")
     assert(Commit.lines(mf).isEmpty)
     Commit.appendLine(mf, """{"batch_id":1}""")
     Commit.appendLine(mf, """{"batch_id":2}""")
     assert(Commit.lines(mf).flatMap(Commit.longField(_, "batch_id")) == Seq(1L, 2L))
+  }
+
+  test("rewrite replaces a manifest's content and leaves no temp file") {
+    val mf = Commit.manifest(graft.TestDirs.create("graft-commit").toString, "m.jsonl")
+    Commit.appendLine(mf, """{"batch_id":1}""")
+    Commit.appendLine(mf, """{"batch_id":2}""")
+    Commit.rewrite(mf, Seq("""{"batch_id":3}""", """{"batch_id":4}"""))
+    assert(Commit.lines(mf).flatMap(Commit.longField(_, "batch_id")) == Seq(3L, 4L))
+    assert(Files.list(mf.getParent).iterator().asScala.map(_.getFileName.toString).toSeq ==
+      Seq("m.jsonl"))
+  }
+
+  test("source guard: manifest rewrites and the versioned fold live only in Commit.scala") {
+    val root = Paths.get("src/main/scala/graft/pipeline")
+    assert(Files.isDirectory(root), s"run from the project root (no $root)")
+    val owned = "ATOMIC_MOVE|compact_manifest".r
+    val offenders = Files.list(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Commit.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if owned.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toSeq
+    assert(offenders.isEmpty,
+      s"route these through Commit.rewrite / Commit.fold:\n${offenders.mkString("\n")}")
   }
 }

@@ -458,7 +458,7 @@ class CuratedPipelineSpec extends AnyFunSuite {
     val dataDirs = Option(new java.io.File(s"$outA/data").listFiles())
       .getOrElse(Array.empty[java.io.File]).filter(_.isDirectory).map(_.getName)
     assert(!dataDirs.exists(_.startsWith("curate_inc=")), s"saw ${dataDirs.mkString(",")}")
-    assert(new java.io.File(s"$outA/data_compact/v1").listFiles()
+    assert(new java.io.File(s"$outA/compact/v1").listFiles()
       .filter(_.isDirectory).forall(_.getName.startsWith("part_bucket=")))
 
     // an increment ACROSS the fold (with a demotion into the compacted
@@ -474,7 +474,7 @@ class CuratedPipelineSpec extends AnyFunSuite {
     assert(CuratedPipeline.compactKept(spark, outA, numBuckets = 4) == 2L)
     CuratedPipeline.vacuumKept(spark, outA)
     assert(keptState(outA) == keptState(outB))
-    assert(!new java.io.File(s"$outA/data_compact/v1").exists())
+    assert(!new java.io.File(s"$outA/compact/v1").exists())
   }
 
   test("readKeptAsOf reconstructs every increment's view; releaseAsOf pairs it with its labels version") {
@@ -865,6 +865,35 @@ class CuratedPipelineSpec extends AnyFunSuite {
       }.toSet
     assert(released == keptUrls)
     assert(released.intersect(opted).isEmpty, "noindex pages must not be released")
+  }
+
+  test("a release increment torn before its index line replays to the full build") {
+    import spark.implicits._
+    val (base, more) = releaseBatches(600L)
+    val out = tmpDir()
+    releaseBase(base, out)
+    val curated = s"$out/curated"
+    // one copy under a new url of each later page the base lacks: the
+    // increment clusters each pair, so it drops rows as well as keeps them
+    val fresh = more.join(base.select($"url"), Seq("url"), "left_anti").as[Page]
+    val batch = more.unionByName(fresh.map(p => p.copy(url = p.url + "?copy=1")))
+    releaseIncrement(batch, out)
+
+    // the kill: the increment's kept rows, deletes and index parquet
+    // landed, its index line did not
+    val mf = Paths.get(curated, "_manifest", "index_manifest.jsonl")
+    Files.write(mf, (Files.readAllLines(mf).get(0) + "\n").getBytes("UTF-8"))
+    assert(CuratedPipeline.indexState(curated)._2 == Set(0L))
+    releaseIncrement(batch, out)
+    assert(CuratedPipeline.indexState(curated)._2 == Set(0L, 1L))
+
+    val full = tmpDir()
+    releaseBase(base.unionByName(batch).dropDuplicates("url"), full)
+    assert(keptIdText(curated) == keptIdText(s"$full/curated"),
+      "the replayed increment must keep exactly what one build over both keeps")
+    def labels(dir: String) = CuratedPipeline.readLabels(spark, dir)
+      .as[(Long, Long)].collect().toSeq.sorted
+    assert(labels(curated) == labels(s"$full/curated"))
   }
 
   test("rerunning the release increment is a no-op, also for a near-dup the index dropped") {

@@ -64,7 +64,7 @@ class PinSpec extends AnyFunSuite {
   }
 
   test("the durable branch writes under the checkpoint dir and returns the same rows") {
-    val dir = Files.createTempDirectory("graft-pin")
+    val dir = graft.TestDirs.create("graft-pin")
     withCheckpointDir(Some(dir.toString)) {
       val before = filesUnder(dir)
       // eager = false still lands eagerly: the durable pin must be written

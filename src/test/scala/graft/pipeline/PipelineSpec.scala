@@ -21,7 +21,7 @@ class PipelineSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def tmpDir(): String = {
-    val d = Files.createTempDirectory("graft-pipe").toString
+    val d = graft.TestDirs.create("graft-pipe").toString
     d
   }
 
@@ -320,7 +320,7 @@ class PipelineSpec extends AnyFunSuite {
     // timeline lands before the stream starts, second half is appended
     // between processAllAvailable calls — session state must carry across
     val cutoff = events.agg(expr("percentile_approx(unix_seconds(ts), 0.5)")).first().getLong(0)
-    val streamDir = Files.createTempDirectory("graft-sess")
+    val streamDir = graft.TestDirs.create("graft-sess")
     events.filter(unix_seconds($"ts") <= cutoff)
       .coalesce(1).write.mode("append").parquet(streamDir.toString)
 
@@ -378,7 +378,7 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
     // file source needs a directory: stage the single parquet into one
-    val streamDir = Files.createTempDirectory("graft-stream")
+    val streamDir = graft.TestDirs.create("graft-stream")
     Files.copy(Paths.get(s"$dir/events.parquet"), streamDir.resolve("events.parquet"))
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val stream = spark.readStream.schema(schema).parquet(streamDir.toString)

@@ -121,13 +121,28 @@ class StreamingIngestSpec extends AnyFunSuite {
 
     // vacuum: folded raw batch dirs and superseded versions deleted,
     // the unified read is unaffected
-    StreamingIngest.vacuum(out)
+    StreamingIngest.vacuum(spark, out)
     assert(!Files.exists(Paths.get(s"$out/data/ingest_batch=0")))
     assert(!Files.exists(Paths.get(s"$out/data/ingest_batch=2")))
     assert(!Files.exists(Paths.get(s"$out/compact/v1")))
     val afterVacuum = StreamingIngest.readAll(spark, out)
     assert(afterVacuum.count() == 320
       && afterVacuum.select("url").distinct().count() == 320)
+  }
+
+  test("a url fetched twice in one micro-batch keeps both rows through compact and vacuum") {
+    val out = tmp()
+    // pages 0..2 fetched a second time inside the same batch
+    StreamingIngest.commitBatch(out, numBuckets = 8)(slice(0, 50).unionByName(slice(0, 3)), 0L)
+    val committed = StreamingIngest.readCommitted(spark, out).count()
+    assert(committed == 53)
+    assert(StreamingIngest.readAll(spark, out).count() == committed)
+    assert(StreamingIngest.compact(spark, out, numBuckets = 8) == 1L)
+    assert(StreamingIngest.readAll(spark, out).count() == committed,
+      "the fold must keep every committed row")
+    StreamingIngest.vacuum(spark, out)
+    assert(!Files.exists(Paths.get(s"$out/data/ingest_batch=0")))
+    assert(StreamingIngest.readAll(spark, out).count() == committed)
   }
 
   test("continuous curation: streamed batches incrementally curate to the full-recompute corpus") {
