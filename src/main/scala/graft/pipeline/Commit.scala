@@ -167,14 +167,16 @@ object Commit {
   private def withRows(spark: SparkSession, root: String, prefix: String,
       ks: Set[Long]): Seq[Long] = {
     val fs = fsOf(spark, root)
+    // listStatus, not listFiles: a LocatedFileStatus reads each entry's
+    // owner and mode, which the local file system without Hadoop's native
+    // library gets by forking `ls -ld` per entry
+    def holdsParquet(p: org.apache.hadoop.fs.Path): Boolean =
+      fs.listStatus(p).exists { s =>
+        if (s.isDirectory) holdsParquet(s.getPath) else s.getPath.getName.endsWith(".parquet")
+      }
     ks.toSeq.sorted.filter { k =>
       val path = new org.apache.hadoop.fs.Path(s"$root/$prefix=$k")
-      fs.exists(path) && {
-        val files = fs.listFiles(path, true)
-        var found = false
-        while (!found && files.hasNext) found = files.next().getPath.getName.endsWith(".parquet")
-        found
-      }
+      fs.exists(path) && holdsParquet(path)
     }
   }
 

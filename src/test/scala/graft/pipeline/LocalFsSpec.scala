@@ -69,6 +69,37 @@ class LocalFsSpec extends AnyFunSuite {
     dirs.foreach(d => assert(mode(d) == "rwxr-xr-x", d.toString))
   }
 
+  test("the versioned fold reads, folds and vacuums without starting a child process (no forked ls)") {
+    import org.apache.spark.sql.functions.{col, lit}
+    // two committed prefixes batch=0, batch=1 of 40 rows each
+    def table(): String = {
+      val dir = graft.TestDirs.create("graft-fs-fold").toString
+      Seq(0L, 1L).foreach { k =>
+        Commit.write(spark.range(40).select(col("id"), (col("id") % 4).cast("int").as("part_bucket"),
+          lit("2025-06-01").as("warc_day"), lit(k).as("batch")),
+          s"$dir/data", "batch", "part_bucket", "warc_day")
+      }
+      dir
+    }
+    def foldCycle(dir: String): (Long, Long, Long) = {
+      val before = Commit.readFolded(spark, dir, "batch", Set(0L, 1L)).get.count()
+      val v = Commit.fold(spark, dir, "batch", Set(0L, 1L), numBuckets = 4)
+      Commit.vacuum(spark, dir, "batch")
+      (before, v, Commit.readFolded(spark, dir, "batch", Set(0L, 1L)).get.count())
+    }
+    // a first cycle loads the classes of the read, fold and vacuum paths
+    foldCycle(table())
+
+    val dir = table()
+    var result = (0L, 0L, 0L)
+    val started = processesStartedBy { result = foldCycle(dir) }
+      .filterNot(_._1 == "getconf PAGESIZE")
+    assert(result == (80L, 1L, 80L))
+    assert(!Files.exists(Paths.get(dir, "data", "batch=0")))
+    assert(started.isEmpty, started.map { case (cmd, by) => s"$cmd <- ${by.take(12).mkString(" <- ")}" }
+      .mkString("started:\n", "\n", ""))
+  }
+
   test("source guard: every graft.pipeline write binds file: through LocalFs") {
     val root = Paths.get("src/main/scala/graft/pipeline")
     // a DataFrameWriter chain, from `.write` to its sink call
