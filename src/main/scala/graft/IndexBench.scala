@@ -4,11 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.InvertedIndex
 
-/** Measures the committed-index claim directly (the IncrementBench
-  * discipline applied to the lexical index): appending a fixed-size batch
-  * to a growing index should stay ~flat — each `append` scans only its
-  * batch and writes one new generation — while rebuilding the whole index
-  * grows 1:1 with the corpus. Also times a query against the multi-
+/** Measures the committed-index claim directly: appending a fixed-size
+  * batch to a growing index should stay ~flat — each `append` scans only
+  * its batch and writes one new generation — while rebuilding the whole
+  * index grows 1:1 with the corpus. Also times a query against the multi-
   * generation index vs the compacted one, since compaction is what keeps
   * read amplification bounded as generations accrue.
   *

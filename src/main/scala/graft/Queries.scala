@@ -537,7 +537,7 @@ object Queries {
     * wrong once dup chains exceed the assumed diameter — DedupSpec pins
     * the deep-chain case).
     */
-  // labels come from q62's committed index (`index/labels/v1`): the curated
+  // labels come from q62's committed index (`index/labels`): the curated
   // build clusters the dup corpus ONCE per (session, sfDir) and q44, q46
   // and q104 read that table, exactly as a real pipeline materializes
   // labels once and joins every consumer against them (round-2 verdict:

@@ -272,8 +272,8 @@ object Commit {
   /** The raw value of the first `"key":` in a manifest line: a number as
     * written, a string without its quotes, or an array's elements without
     * the brackets ("" when empty). Keys are matched with their quotes, so
-    * `version` never matches `labels_version`. None also when the value is
-    * cut off (a torn last line).
+    * `id` never matches `batch_id`. None also when the value is cut off
+    * (a torn last line).
     */
   def field(line: String, key: String): Option[String] = {
     val at = line.indexOf("\"" + key + "\":")

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The composed training-data pipeline: extract → quality gate → near-dup
@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
   * is deterministic, so the keep set is identical and only the buckets
   * missing from the manifest are (re)written.
   *
-  * `run` always commits its dedup index (`index/bands`, `index/labels/v1`)
-  * after the kept buckets; [[readBands]] and [[readLabels]] are how every
-  * other consumer reads that clustering instead of recomputing it.
+  * `run` always commits its dedup index (`index/bands`, `index/labels`,
+  * increment 0) after the kept buckets; [[readBands]] and [[readLabels]]
+  * are how every other consumer reads that clustering instead of
+  * recomputing it.
   */
 object CuratedPipeline {
 
@@ -55,7 +56,7 @@ object CuratedPipeline {
     // resume no-op — EXCEPT when a prior run was killed between its last
     // bucket commit and the index write: then labels recompute
     // (deterministic) and the index still gets committed
-    if (remaining.isEmpty && indexState(outDir)._1 >= 1L) return Seq.empty
+    if (remaining.isEmpty && indexState(outDir).nonEmpty) return Seq.empty
 
     // band keys computed ONCE and shared between the components pass and
     // the persisted index — the index is what curateIncrement probes so a
@@ -88,7 +89,7 @@ object CuratedPipeline {
     // A kill between the final bucket commit and this write is the one
     // torn state left, and the resume carve-out above recomputes labels
     // (deterministic) and lands here again.
-    writeIndex(spark, outDir, keyed, labelsRaw, increment = 0L, labelsVersion = 1L)
+    writeIndex(outDir, 0L, keyed, labelsRaw, remap = None)
     lineage
   }
 
@@ -112,15 +113,28 @@ object CuratedPipeline {
   //
   // A continuous pipeline ingesting crawl batches cannot re-run global
   // LSH + connected components over 100 TB per day (round-3 verdict #1).
-  // `run` therefore persists its dedup state as two committed tables next
-  // to the kept corpus:
+  // `run` therefore persists its dedup state next to the kept corpus as
+  // three tables that every increment only APPENDS to, one
+  // `increment=<k>` prefix each (the base build is increment 0):
   //
-  //   out/index/bands/increment=<k>/   (id, band)  — every band key ever
-  //                                                  seen, appended per batch
-  //   out/index/labels/v<N>/           (id, comp)  — current global labels,
-  //                                                  versioned like compaction
-  //   out/_manifest/index_manifest.jsonl — {"increment":k,"labels_version":N}
-  //                                        appended AFTER both writes commit
+  //   out/index/bands/increment=<k>/  (id, band)        — the band keys of
+  //                                                        the docs k keyed
+  //   out/index/labels/increment=<k>/ (id, comp)        — those docs'
+  //                                                        labels as of k
+  //   out/index/remap/increment=<k>/  (old_comp, comp)  — every canonical
+  //                                   demoted by increments ≤ k, mapped to
+  //                                   its component as of k
+  //   out/_manifest/index_manifest.jsonl — {"increment":k}, appended AFTER
+  //                                        the three writes commit
+  //
+  // Labels as of increment a = the label prefixes ≤ a, re-pointed through
+  // the remap at a (a broadcast left join). A label written at increment
+  // j names a component that was live at j, and components only merge, so
+  // the remap at a carries it to its component at a. The remap's keys are
+  // the kept table's delete set. Each increment's remap is the previous
+  // one re-pointed through this increment's demotions, plus those
+  // demotions: no key appears twice, because a demoted id is never again
+  // a component minimum.
   //
   // `curateIncrement(newBatch)` then curates a new batch by PROBING the
   // stored index instead of re-clustering the world:
@@ -138,37 +152,70 @@ object CuratedPipeline {
   //   4. the kept corpus updates by delta: new canonicals append under
   //      their own `curate_inc=<k>` prefix; a stored canonical whose
   //      component label shrank (a new doc bridged it to a smaller id) is
-  //      DEMOTED — recorded in the tiny `index/demoted/increment=<k>`
-  //      logical-delete table (the Iceberg delete-file discipline), never
-  //      by rewriting its data partition. Readers apply the delete set as
-  //      a broadcast anti-join ([[readKept]]); [[compactKept]] folds the
-  //      accumulated increment prefixes back into one base layout.
+  //      DEMOTED — a key of the remap (the Iceberg delete-file
+  //      discipline), never a rewrite of its data partition. Readers apply
+  //      the remap's keys as a broadcast anti-join ([[readKept]]);
+  //      [[compactKept]] folds the accumulated increment prefixes back
+  //      into one base layout.
   //
-  // Work is O(batch + collided components), not O(corpus). Determinism
-  // makes `incremental ≡ full recompute` an exact equality
+  // Work and writes are O(batch + collided components), not O(corpus).
+  // Determinism makes `incremental ≡ full recompute` an exact equality
   // (CuratedPipelineSpec proves kept-set and label-table equality, q74
   // pins it against the DuckDB full-corpus oracle).
 
   private def indexBandsDir(outDir: String) = s"$outDir/index/bands"
-  private def indexLabelsDir(outDir: String, v: Long) = s"$outDir/index/labels/v$v"
+  private def indexLabelsDir(outDir: String) = s"$outDir/index/labels"
+  private def indexRemapDir(outDir: String) = s"$outDir/index/remap"
 
-  /** (current labels version, committed increment ids); (0, ∅) = no index. */
-  def indexState(outDir: String): (Long, Set[Long]) = {
-    val lines = Commit.lines(Commit.manifest(outDir, "index_manifest.jsonl"))
-    ((0L +: lines.flatMap(Commit.longField(_, "labels_version"))).max,
-      lines.flatMap(Commit.longField(_, "increment")).toSet)
+  /** The committed index increments; ∅ = no index. */
+  def indexState(outDir: String): Set[Long] =
+    Commit.lines(Commit.manifest(outDir, "index_manifest.jsonl"))
+      .flatMap(Commit.longField(_, "increment")).toSet
+
+  /** Append increment `increment`'s band keys, labels and (when it has
+    * one) composed remap, then commit them with the manifest line. Each
+    * write is a dynamic overwrite of its own `increment=<k>`, so a replay
+    * rewrites exactly what the torn attempt wrote.
+    */
+  private def writeIndex(outDir: String, increment: Long, keys: DataFrame,
+      labels: DataFrame, remap: Option[DataFrame]): Unit = {
+    def append(df: DataFrame, dir: String): Unit =
+      Commit.write(df.withColumn("increment", lit(increment)), dir, "increment")
+    append(keys.select(col("id"), col("band")), indexBandsDir(outDir))
+    append(labels.select(col("id"), col("comp")), indexLabelsDir(outDir))
+    remap.foreach(r => append(r.select(col("old_comp"), col("comp")).repartition(1),
+      indexRemapDir(outDir)))
+    Commit.appendLine(Commit.manifest(outDir, "index_manifest.jsonl"),
+      s"""{"increment":$increment}""")
   }
 
-  private def writeIndex(spark: SparkSession, outDir: String,
-      keys: DataFrame, labels: DataFrame, increment: Long, labelsVersion: Long): Unit = {
-    // replay rewrites only increment=<k>
-    Commit.write(keys.select(col("id"), col("band")).withColumn("increment", lit(increment)),
-      indexBandsDir(outDir), "increment")
-    labels.select(col("id"), col("comp"))
-      .write.mode(SaveMode.Overwrite).options(LocalFs.writeOptions)
-      .parquet(indexLabelsDir(outDir, labelsVersion))
-    Commit.appendLine(Commit.manifest(outDir, "index_manifest.jsonl"),
-      s"""{"increment":$increment,"labels_version":$labelsVersion}""")
+  /** The composed remap at committed increment `k`; None when no increment
+    * ≤ k demoted anything.
+    */
+  private def readRemap(spark: SparkSession, outDir: String, k: Long): Option[DataFrame] =
+    Commit.readPrefixes(spark, indexRemapDir(outDir), "increment", Set(k))
+      .map(_.select(col("old_comp"), col("comp")))
+
+  /** `df` with its `comp` column re-pointed through `remap`
+    * (old_comp → comp), a broadcast left join.
+    */
+  private def repoint(df: DataFrame, remap: DataFrame): DataFrame =
+    df.join(broadcast(remap.select(col("old_comp").as("__from"), col("comp").as("__to"))),
+        col("comp") === col("__from"), "left")
+      .withColumn("comp", coalesce(col("__to"), col("comp")))
+      .drop("__from", "__to")
+
+  /** (id, comp) labels as of committed increment `asOf`: the label
+    * prefixes ≤ asOf re-pointed through `remap`, the remap at asOf (None
+    * leaves each comp as its increment wrote it; the ids are the same).
+    */
+  private def labelsAsOf(spark: SparkSession, outDir: String, asOf: Long,
+      remap: Option[DataFrame]): DataFrame = {
+    val labels = Commit.readPrefixes(spark, indexLabelsDir(outDir), "increment",
+        indexState(outDir).filter(_ <= asOf))
+      .getOrElse(spark.range(0).select(col("id"), col("id").as("comp")))
+      .select(col("id"), col("comp"))
+    remap.fold(labels)(repoint(labels, _))
   }
 
   /** Read the current (id, comp) labels table — the committed materialized
@@ -176,9 +223,9 @@ object CuratedPipeline {
     * OTHER session/consumer to join against.
     */
   def readLabels(spark: SparkSession, outDir: String): DataFrame = {
-    val (v, _) = indexState(outDir)
-    require(v >= 1, s"no curated index at $outDir — run() writes it")
-    spark.read.parquet(indexLabelsDir(outDir, v))
+    val incs = indexState(outDir)
+    require(incs.nonEmpty, s"no curated index at $outDir — run() writes it")
+    labelsAsOf(spark, outDir, incs.max, readRemap(spark, outDir, incs.max))
   }
 
   /** Read the committed (id, band) key table — every band key of every
@@ -187,8 +234,8 @@ object CuratedPipeline {
     * folds and the analysis queries read.
     */
   def readBands(spark: SparkSession, outDir: String): DataFrame = {
-    val (v, incs) = indexState(outDir)
-    require(v >= 1, s"no curated index at $outDir — run() writes it")
+    val incs = indexState(outDir)
+    require(incs.nonEmpty, s"no curated index at $outDir — run() writes it")
     // committed increments only, like every read of a curated table
     Commit.readPrefixes(spark, indexBandsDir(outDir), "increment", incs)
       .getOrElse(spark.range(0).select(col("id"), lit("").as("band")))
@@ -198,25 +245,18 @@ object CuratedPipeline {
   /** Maintenance for the dedup index (the analog of
     * [[StreamingIngest.vacuum]] + [[ExtractPipeline.compactManifest]]):
     * a continuous pipeline accrues one `increment=<k>` band directory per
-    * batch and one labels version per increment. This folds every band
-    * increment into the newest one (distinct keys, ≈1 file) and deletes
-    * label versions older than current. Crash-safe without a commit
-    * protocol of its own: duplicate (id, band) rows from a half-finished
-    * fold are INERT — every index consumer (`starEdges` hubs, the
-    * increment's probe) already distincts — so a replay simply converges.
-    * Single maintenance writer assumed, like every compaction here.
-    *
-    * @param keepLabelVersions how many label versions to retain (≥1;
-    *        default 1 = current only). Labels are corpus-sized, so every
-    *        retained version costs O(corpus ids) — raise this only as far
-    *        back as [[releaseAsOf]] release cuts still need to be
-    *        reproducible.
+    * batch, and this folds every band increment into the newest one
+    * (distinct keys, ≈1 file). Label and remap prefixes stay: they are
+    * batch-sized, and [[releaseAsOf]] reads them for every increment.
+    * Crash-safe without a commit protocol of its own: duplicate (id, band)
+    * rows from a half-finished fold are INERT — every index consumer
+    * (`starEdges` hubs, the increment's probe) already distincts — so a
+    * replay simply converges. Single maintenance writer assumed, like
+    * every compaction here.
     */
-  def compactIndex(spark: SparkSession, outDir: String,
-      keepLabelVersions: Int = 1): Unit = {
-    require(keepLabelVersions >= 1, "must retain at least the current labels version")
-    val (v, incs) = indexState(outDir)
-    require(v >= 1, s"no curated index at $outDir")
+  def compactIndex(spark: SparkSession, outDir: String): Unit = {
+    val incs = indexState(outDir)
+    require(incs.nonEmpty, s"no curated index at $outDir")
     if (incs.size > 1) {
       val target = incs.max
       // checkpoint breaks the self-overwrite cycle (read bands, write bands)
@@ -228,8 +268,6 @@ object CuratedPipeline {
       incs.filter(_ != target)
         .foreach(k => Commit.delete(spark, s"${indexBandsDir(outDir)}/increment=$k"))
     }
-    (1L until math.max(1L, v - (keepLabelVersions - 1)))
-      .foreach(old => Commit.delete(spark, indexLabelsDir(outDir, old)))
   }
 
   /** Curate a NEW batch against an existing curated corpus by probing the
@@ -261,10 +299,11 @@ object CuratedPipeline {
     val batch = Pin(newBatch)
     if (batch.isEmpty) return Seq.empty
 
-    val (curVersion, incs) = indexState(outDir)
-    require(curVersion >= 1, s"no curated index at $outDir — run() writes it")
+    val incs = indexState(outDir)
+    require(incs.nonEmpty, s"no curated index at $outDir — run() writes it")
     val storedKeys = readBands(spark, outDir)
-    val storedLabels = spark.read.parquet(indexLabelsDir(outDir, curVersion))
+    val storedRemap = readRemap(spark, outDir, incs.max)
+    val storedLabels = labelsAsOf(spark, outDir, incs.max, storedRemap)
 
     // 1. band-key the batch (the only full pass over the new data)
     val newKeys = Pin(Dedup.bandKeys(batch, idCol, textCol, canonicalCol))
@@ -287,15 +326,10 @@ object CuratedPipeline {
     val storedCompIds = storedCompKeys.select(col("id")).distinct()
     val remap = Pin(sub.join(storedCompIds, Seq("id"))
       .filter(col("comp") =!= col("id"))
-      .select(col("id").as("old_comp"), col("comp").as("new_comp")))
-
-    // labels vNext = stored labels re-pointed through the remap ∪ new-doc labels
+      .select(col("id").as("old_comp"), col("comp")))
+    // this increment's remap composed onto the previous increment's
+    val composed = storedRemap.fold(remap)(repoint(_, remap).unionByName(remap))
     val newDocLabels = sub.join(newKeys.select(col("id")).distinct(), Seq("id"))
-    val labelsNext = Pin(storedLabels
-      .join(remap, storedLabels("comp") === remap("old_comp"), "left")
-      .select(storedLabels("id"),
-        coalesce(col("new_comp"), storedLabels("comp")).as("comp"))
-      .unionByName(newDocLabels.select(col("id"), col("comp"))))
 
     // 4. kept-set delta — the Iceberg MERGE-ON-READ shape (this is the
     // point of the whole design):
@@ -304,19 +338,18 @@ object CuratedPipeline {
     //     OWN curate_inc=<k> prefix — zero existing partitions are read or
     //     rewritten. Per-batch write cost is O(batch), not O(corpus).
     //   * DEMOTIONS are LOGICAL: a stored canonical whose component label
-    //     shrank (rare: a new doc bridged/undercut an old cluster) is
-    //     recorded in the `index/demoted/increment=<k>` delete table — the
-    //     remap output, KBs per batch — instead of rewriting its data
-    //     partition. [[readKept]] applies the delete set as a broadcast
-    //     anti-join; [[compactKept]] folds the physical layout on the
-    //     maintenance schedule. Besides making the increment's write path
-    //     pure-append, this is what makes the kept table TIME-TRAVELABLE
-    //     ([[readKeptAsOf]]): the rows a past snapshot saw are still on
-    //     disk, excluded only by later delete entries.
+    //     shrank (rare: a new doc bridged/undercut an old cluster) becomes
+    //     a key of the composed remap — KBs per batch — instead of a
+    //     rewrite of its data partition. [[readKept]] applies the remap's
+    //     keys as a broadcast anti-join; [[compactKept]] folds the physical
+    //     layout on the maintenance schedule. Besides making the
+    //     increment's write path pure-append, this is what makes the kept
+    //     table TIME-TRAVELABLE ([[readKeptAsOf]]): the rows a past
+    //     snapshot saw are still on disk, excluded only by a later remap.
     // Idempotence needs no row-level dedup: a replay overwrites exactly
-    // its own curate_inc=<k> data partitions and its own
-    // demoted/increment=<k> delete partition.
-    val inc = if (incs.isEmpty) 1L else incs.max + 1L
+    // its own curate_inc=<k> data partitions and its own increment=<k>
+    // index prefixes.
+    val inc = incs.max + 1L
     val keptNew = batch
       .join(newDocLabels.select(col("id").as("__cid"), col("comp").as("__comp")),
         col(idCol) === col("__cid"), "left")
@@ -328,16 +361,10 @@ object CuratedPipeline {
     // one snapshot group: the whole append commits as one snapshot
     val lineage = commitKept(keptNew, outDir, textCol, numBuckets, newBuckets,
       snapshotGroups = 1, runId, inc.toInt)
-    // the logical-delete partition for THIS increment — dynamic overwrite,
-    // so a replay rewrites exactly increment=<k>; committed BEFORE the
-    // index manifest line like every other artifact of the increment
-    Commit.write(remap.select(col("old_comp").as("id"))
-      .withColumn("increment", lit(inc))
-      .repartition(1), demotedDir(outDir), "increment")
 
-    // 5. commit the index LAST: bands increment + labels vNext, manifest after
-    writeIndex(spark, outDir, newKeys, labelsNext, increment = inc,
-      labelsVersion = curVersion + 1)
+    // 5. commit the index LAST: the increment's bands, labels and composed
+    // remap, manifest line after
+    writeIndex(outDir, inc, newKeys, newDocLabels, Some(composed))
     lineage
   }
 
@@ -394,11 +421,17 @@ object CuratedPipeline {
     // segment; one row per id before curation (first fetch wins)
     val batch = rows.dropDuplicates("id")
     val canonical = Some("canonical_url")
-    if (indexState(curatedDir)._1 == 0L)
-      run(spark, batch, curatedDir, idCol = "id", textCol = "extracted_text",
+    val incs = indexState(curatedDir)
+    if (incs.isEmpty) {
+      // an empty first batch (a landing segment without one HTTP-200 page)
+      // commits nothing: a base build without kept rows would leave the
+      // next batch's read of the kept table nothing to read
+      if (batch.isEmpty) Seq.empty
+      else run(spark, batch, curatedDir, idCol = "id", textCol = "extracted_text",
         numBuckets = numBuckets, snapshotGroups = 1, runId = runId, canonicalCol = canonical)
-    else {
-      val seen = readLabels(spark, curatedDir).select(col("id"))
+    } else {
+      // labeled ids need no remap: it re-points comps only
+      val seen = labelsAsOf(spark, curatedDir, incs.max, remap = None).select(col("id"))
         .unionByName(readKept(spark, curatedDir).select(col("id")))
       curateIncrement(spark, batch.join(seen, Seq("id"), "left_anti"), curatedDir,
         idCol = "id", textCol = "extracted_text", numBuckets = numBuckets,
@@ -566,43 +599,44 @@ object CuratedPipeline {
   // Every read sees committed increments only, deletes included, so an
   // increment killed before its index line is invisible as a whole and its
   // replay curates the same batch again. Demotions are never applied
-  // physically — the delete table is KBs and riding it as a broadcast
-  // anti-join is what keeps BOTH the increment write path pure-append AND
-  // readKeptAsOf exact across a fold.
-
-  private def demotedDir(outDir: String) = s"$outDir/index/demoted"
-
-  /** The logical-delete table: (id, increment) for every canonical demoted
-    * by a committed increment's bridge/undercut — the rare-path remap
-    * output, KBs per batch, applied by readers as a broadcast anti-join.
-    */
-  def readDemoted(spark: SparkSession, outDir: String): DataFrame =
-    // a demotion-free increment leaves no increment=<k> partition
-    Commit.readPrefixes(spark, demotedDir(outDir), "increment", indexState(outDir)._2)
-      .getOrElse(spark.range(0).select(col("id"), lit(0L).as("increment")))
+  // physically — the delete set is the remap's keys, KBs, and riding it as
+  // a broadcast anti-join is what keeps BOTH the increment write path
+  // pure-append AND readKeptAsOf exact across a fold.
 
   /** Raw committed kept rows, deletes NOT applied: current compact version
     * ∪ committed increment prefixes not folded into it.
     */
   private[pipeline] def keptRaw(spark: SparkSession, outDir: String): DataFrame =
-    Commit.readFolded(spark, outDir, "curate_inc", indexState(outDir)._2).getOrElse(
+    Commit.readFolded(spark, outDir, "curate_inc", indexState(outDir)).getOrElse(
       throw new IllegalStateException(s"no committed kept rows at $outDir"))
 
+  /** Committed kept rows appended at increments ≤ `asOf`, minus the
+    * canonicals the remap at `asOf` demoted (a broadcast anti-join).
+    */
+  private def keptAsOf(spark: SparkSession, outDir: String, asOf: Long,
+      idCol: String): DataFrame = {
+    val raw = keptRaw(spark, outDir).filter(col("curate_inc") <= asOf)
+    readRemap(spark, outDir, asOf).fold(raw) { remap =>
+      raw.join(broadcast(remap.select(col("old_comp").as("__del_id"))),
+        raw(idCol) === col("__del_id"), "left_anti")
+    }
+  }
+
   /** Read the committed kept corpus: base/compact layout ∪ live increment
-    * prefixes, with the logical-delete table applied as a broadcast
-    * anti-join (merge-on-read).
+    * prefixes, with the demoted canonicals removed by a broadcast anti-join
+    * (merge-on-read).
     * @param idCol the doc-id column the table was curated under
     */
   def readKept(spark: SparkSession, outDir: String, idCol: String = "id"): DataFrame = {
-    val raw = keptRaw(spark, outDir)
-    val del = readDemoted(spark, outDir).select(col("id").as("__del_id"))
-    raw.join(broadcast(del), raw(idCol) === col("__del_id"), "left_anti")
+    val incs = indexState(outDir)
+    if (incs.isEmpty) keptRaw(spark, outDir) // no committed rows: fails loudly
+    else keptAsOf(spark, outDir, incs.max, idCol)
   }
 
   /** Fold every committed `curate_inc=<k>` increment prefix into one
     * versioned base layout (≈1 file per bucket × day instead of
     * increments × buckets × days). Rows keep their `curate_inc` (as a data
-    * column) and the delete table is never applied physically, so
+    * column) and demotions are never applied physically, so
     * [[readKeptAsOf]] still reconstructs any increment's view across the
     * fold. Torn (uncommitted) increments are excluded — their replay
     * re-appends them after the fold.
@@ -610,27 +644,17 @@ object CuratedPipeline {
     * @return the new compact version (current version if nothing to fold)
     */
   def compactKept(spark: SparkSession, outDir: String, numBuckets: Int = 32): Long =
-    Commit.fold(spark, outDir, "curate_inc", indexState(outDir)._2, numBuckets)
+    Commit.fold(spark, outDir, "curate_inc", indexState(outDir), numBuckets)
 
   /** Delete kept-table directories superseded by [[compactKept]]: folded
     * `curate_inc=<k>` prefixes and compact versions older than current.
     * Logically lossless — every folded row lives on in the current compact
     * version, and time travel needs only the `curate_inc` column and the
-    * delete table, both retained. Run only when no reader is mid-query
+    * remap, both retained. Run only when no reader is mid-query
     * (single-writer maintenance, the expire_snapshots caveat).
     */
   def vacuumKept(spark: SparkSession, outDir: String): Unit =
     Commit.vacuum(spark, outDir, "curate_inc")
-
-  /** Committed (increment, labels_version) pairs in commit order — the
-    * curated table's snapshot history. One snapshot per increment; the
-    * base build is increment 0.
-    */
-  def keptSnapshots(outDir: String): Seq[(Long, Long)] =
-    Commit.lines(Commit.manifest(outDir, "index_manifest.jsonl")).flatMap { line =>
-      for (i <- Commit.longField(line, "increment"); v <- Commit.longField(line, "labels_version"))
-        yield (i, v)
-    }
 
   /** Time travel on the kept corpus: exactly what [[readKept]] returned
     * when increment `asOf` was the head — rows appended at increments
@@ -643,32 +667,20 @@ object CuratedPipeline {
     */
   def readKeptAsOf(spark: SparkSession, outDir: String, asOf: Long,
       idCol: String = "id"): DataFrame = {
-    val snaps = keptSnapshots(outDir)
-    require(snaps.exists(_._1 == asOf),
-      s"unknown increment $asOf (committed: ${snaps.map(_._1).mkString(",")})")
-    val raw = keptRaw(spark, outDir).filter(col("curate_inc") <= asOf)
-    val del = readDemoted(spark, outDir)
-      .filter(col("increment") <= asOf).select(col("id").as("__del_id"))
-    raw.join(broadcast(del), raw(idCol) === col("__del_id"), "left_anti")
+    val incs = indexState(outDir)
+    require(incs.contains(asOf),
+      s"unknown increment $asOf (committed: ${incs.toSeq.sorted.mkString(",")})")
+    keptAsOf(spark, outDir, asOf, idCol)
   }
 
   /** A reproducible RELEASE CUT: (kept rows, labels) AS OF one committed
     * increment — the pair a corpus release ships, mutually consistent
-    * because the index manifest pairs each increment with the labels
-    * version it committed. Requires [[compactIndex]]'s label-version
-    * retention (`keepLabelVersions`) to still hold that version; a
-    * vacuumed version fails loudly here rather than silently serving
-    * newer labels.
+    * because both read the same increment's remap. Exact for every
+    * committed increment for as long as the table exists: label and remap
+    * prefixes are never folded or vacuumed.
     */
   def releaseAsOf(spark: SparkSession, outDir: String, asOf: Long,
-      idCol: String = "id"): (DataFrame, DataFrame) = {
-    val v = keptSnapshots(outDir).find(_._1 == asOf).map(_._2).getOrElse(
-      throw new IllegalArgumentException(s"unknown increment $asOf"))
-    val labelsPath = new org.apache.hadoop.fs.Path(indexLabelsDir(outDir, v))
-    val fs = labelsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(labelsPath),
-      s"labels v$v for increment $asOf was vacuumed by compactIndex — " +
-        "retain it with keepLabelVersions to cut this release")
-    (readKeptAsOf(spark, outDir, asOf, idCol), spark.read.parquet(indexLabelsDir(outDir, v)))
-  }
+      idCol: String = "id"): (DataFrame, DataFrame) =
+    (readKeptAsOf(spark, outDir, asOf, idCol),
+      labelsAsOf(spark, outDir, asOf, readRemap(spark, outDir, asOf)))
 }

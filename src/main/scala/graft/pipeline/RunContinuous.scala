@@ -62,10 +62,9 @@ object RunContinuous {
       "xxhash64(url, extracted_text, invoice_number, cast(n_products AS STRING)) AS h")
       .selectExpr("conv(cast(aggregate(collect_list(h), 0L, (a, x) -> a ^ x) AS STRING), 10, 16) AS d")
       .first().getString(0)
-    val (labelsVersion, increments) = CuratedPipeline.indexState(s"$outDir/curated")
     println(f"[continuous] pages=$n segments=$nSegments kept=$nKept " +
       f"batches=${StreamingIngest.committedBatches(s"$outDir/extract").size} " +
-      f"labelsVersion=$labelsVersion increments=${increments.size} " +
+      f"increments=${CuratedPipeline.indexState(s"$outDir/curated").size} " +
       f"digest=$digest wall=$sec%.1fs")
     spark.stop()
   }

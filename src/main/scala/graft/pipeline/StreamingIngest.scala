@@ -49,12 +49,15 @@ object StreamingIngest {
     // dynamic overwrite: replay rewrites ingest_batch=<id>/... in place,
     // exactly-once by construction
     Commit.write(extracted, s"$outDir/data", "ingest_batch", "part_bucket", "warc_day")
-    val stats = spark.read.parquet(s"$outDir/data")
-      .filter(col("ingest_batch") === batchId)
-      .agg(count(lit(1)), sum(when(col("success"), 1L).otherwise(0L))).head()
-    val ok = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+    // counted from this batch's own prefix; a batch without rows (a landing
+    // segment with no HTTP-200 response) wrote none and counts 0
+    val (rows, ok) = Commit.readPrefixes(spark, s"$outDir/data", "ingest_batch", Set(batchId))
+      .fold((0L, 0L)) { df =>
+        val r = df.agg(count(lit(1)), count(when(col("success"), 1))).head()
+        (r.getLong(0), r.getLong(1))
+      }
     Commit.appendLine(Commit.manifest(outDir, "stream_manifest.jsonl"),
-      s"""{"batch_id":$batchId,"rows":${stats.getLong(0)},"ok_rows":$ok}""")
+      s"""{"batch_id":$batchId,"rows":$rows,"ok_rows":$ok}""")
   }
 
   /** Wire a pages stream into the committed table. Caller starts/stops the

@@ -52,4 +52,17 @@ class CommitSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"route these through Commit.rewrite / Commit.fold:\n${offenders.mkString("\n")}")
   }
+
+  test("source guard: CuratedPipeline writes through Commit.write and keeps one label history") {
+    val src = Paths.get("src/main/scala/graft/pipeline/CuratedPipeline.scala")
+    assert(Files.exists(src), s"run from the project root (no $src)")
+    // a writer of its own (SaveMode, `.write.`) or the retired label
+    // versions / demoted table
+    val banned = """SaveMode|\.write\b(?!\()|labels/v|index/demoted|demotedDir""".r
+    val offenders = Files.readAllLines(src).asScala.zipWithIndex.collect {
+      case (line, i) if banned.findFirstIn(line).isDefined => s"$src:${i + 1}: ${line.trim}"
+    }
+    assert(offenders.isEmpty,
+      s"write through Commit.write into the increment=<k> index tables:\n${offenders.mkString("\n")}")
+  }
 }

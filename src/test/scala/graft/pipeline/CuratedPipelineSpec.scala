@@ -257,6 +257,14 @@ class CuratedPipelineSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().sorted.toSeq
   }
 
+  /** `releaseAsOf(out, k)` as (kept ids, labels), both sorted. */
+  private def releaseCut(out: String, k: Long) = {
+    import spark.implicits._
+    val (kept, labels) = CuratedPipeline.releaseAsOf(spark, out, k)
+    (kept.select($"id").as[Long].collect().sorted.toSeq,
+      labels.as[(Long, Long)].collect().sorted.toSeq)
+  }
+
   test("curateIncrement(b2) after run(b1) equals run(b1 ∪ b2): appends, drops, logical demotion") {
     import spark.implicits._
     val textA = "the quick brown fox jumps over the lazy dog"
@@ -297,15 +305,15 @@ class CuratedPipelineSpec extends AnyFunSuite {
     assert(labelState(outA) == labelState(outB),
       "incrementally maintained labels must equal the full recompute")
     // demotion is LOGICAL (merge-on-read): doc 40's partition is still on
-    // disk — the increment never rewrites existing data — and the delete
-    // table carries exactly the demoted id
+    // disk — the increment never rewrites existing data — and the
+    // increment's remap carries exactly the demoted id
     val days = new java.io.File(s"$outA/data").listFiles().filter(_.isDirectory)
       .flatMap(_.listFiles()).filter(_.isDirectory)
       .flatMap(_.listFiles()).map(_.getName).toSet
     assert(days.contains("warc_day=2024-07-19"),
       s"demotion must not rewrite data partitions, saw $days")
-    assert(CuratedPipeline.readDemoted(spark, outA)
-      .as[(Long, Long)].collect().toSeq == Seq((40L, 1L)))
+    assert(spark.read.parquet(s"$outA/index/remap/increment=1")
+      .select($"old_comp", $"comp").as[(Long, Long)].collect().toSeq == Seq((40L, 5L)))
   }
 
   test("an EMPTY increment is a no-op: no snapshot, no prefix, compactKept survives a legacy empty prefix") {
@@ -313,12 +321,12 @@ class CuratedPipelineSpec extends AnyFunSuite {
     val out = tmpDir()
     CuratedPipeline.run(spark, corpus(), out, numBuckets = 8, snapshotGroups = 2, runId = "e0")
     val kept0 = keptState(out)
-    val snaps0 = CuratedPipeline.keptSnapshots(out)
+    val snaps0 = CuratedPipeline.indexState(out)
     // a resumed job whose delta anti-joined to nothing curates an empty frame
     val lineage = CuratedPipeline.curateIncrement(spark,
       corpus().filter($"id" < 0), out, textCol = "text", numBuckets = 8, runId = "e1")
     assert(lineage.isEmpty)
-    assert(CuratedPipeline.keptSnapshots(out) == snaps0, "no snapshot for an empty increment")
+    assert(CuratedPipeline.indexState(out) == snaps0, "no snapshot for an empty increment")
     assert(keptState(out) == kept0)
     // a legacy/torn rows-less prefix must not poison the fold's schema read
     val emptyPrefix = new java.io.File(s"$out/data/curate_inc=7")
@@ -380,7 +388,7 @@ class CuratedPipelineSpec extends AnyFunSuite {
     val mf = Paths.get(outA, "_manifest", "index_manifest.jsonl")
     val lines = Files.readAllLines(mf)
     Files.write(mf, (lines.get(0) + "\n").getBytes("UTF-8"))
-    assert(CuratedPipeline.indexState(outA)._1 == 1L)
+    assert(CuratedPipeline.indexState(outA) == Set(0L))
 
     // replay the increment from the previous committed index
     CuratedPipeline.curateIncrement(spark, b2, outA, numBuckets = 4, runId = "b2r")
@@ -391,7 +399,7 @@ class CuratedPipelineSpec extends AnyFunSuite {
     assert(labelState(outA) == labelState(outB))
   }
 
-  test("compactIndex folds band increments and drops stale label versions; increments keep working") {
+  test("compactIndex folds band increments and keeps every label prefix; increments keep working") {
     import spark.implicits._
     val textA = "the quick brown fox jumps over the lazy dog"
     val textB = "pack my box with five dozen liquor jugs today"
@@ -410,14 +418,17 @@ class CuratedPipelineSpec extends AnyFunSuite {
     CuratedPipeline.run(spark, b1, outA, numBuckets = 4, snapshotGroups = 1, runId = "b1")
     CuratedPipeline.curateIncrement(spark, b2, outA, numBuckets = 4, runId = "b2")
     CuratedPipeline.curateIncrement(spark, b3, outA, numBuckets = 4, runId = "b3")
-    assert(CuratedPipeline.indexState(outA) == ((3L, Set(0L, 1L, 2L))))
-    assert(new java.io.File(s"$outA/index/labels").listFiles().length == 3)
+    assert(CuratedPipeline.indexState(outA) == Set(0L, 1L, 2L))
+    def labelDirs = new java.io.File(s"$outA/index/labels").listFiles()
+      .filter(_.getName.startsWith("increment=")).map(_.getName).sorted.toSeq
+    assert(labelDirs == Seq("increment=0", "increment=1", "increment=2"))
 
     CuratedPipeline.compactIndex(spark, outA)
     val bandDirs = new java.io.File(s"$outA/index/bands").listFiles()
       .filter(_.getName.startsWith("increment=")).map(_.getName)
     assert(bandDirs.toSeq == Seq("increment=2"), s"got ${bandDirs.mkString(",")}")
-    assert(new java.io.File(s"$outA/index/labels").listFiles().map(_.getName).toSeq == Seq("v3"))
+    assert(labelDirs == Seq("increment=0", "increment=1", "increment=2"),
+      "label prefixes are batch-sized and time travel reads them: never folded")
 
     // the compacted index still drives a correct increment (incl. demotion)
     CuratedPipeline.curateIncrement(spark, b4, outA, numBuckets = 4, runId = "b4")
@@ -477,7 +488,7 @@ class CuratedPipelineSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$outA/compact/v1").exists())
   }
 
-  test("readKeptAsOf reconstructs every increment's view; releaseAsOf pairs it with its labels version") {
+  test("readKeptAsOf reconstructs every increment's view; releaseAsOf pairs it with that increment's labels") {
     import spark.implicits._
     val textA = "the quick brown fox jumps over the lazy dog"
     val textB = "pack my box with five dozen liquor jugs today"
@@ -499,7 +510,7 @@ class CuratedPipelineSpec extends AnyFunSuite {
     assert(v1.map(_._1) == Seq(10L, 20L, 40L))
     assert(v2.map(_._1) == Seq(5L, 10L, 40L)) // 20 demoted by 5
 
-    assert(CuratedPipeline.keptSnapshots(out) == Seq((0L, 1L), (1L, 2L), (2L, 3L)))
+    assert(CuratedPipeline.indexState(out) == Set(0L, 1L, 2L))
     def asOf(k: Long) = CuratedPipeline.readKeptAsOf(spark, out, k)
       .select($"id", $"text").as[(Long, String)].collect().sortBy(_._1).toSeq
     assert(asOf(0L) == v0, "as-of increment 0 must equal what readKept returned then")
@@ -513,8 +524,8 @@ class CuratedPipelineSpec extends AnyFunSuite {
     assert(asOf(0L) == v0 && asOf(1L) == v1 && asOf(2L) == v2,
       "per-snapshot kept sets must survive kept-table compaction")
 
-    // release cut: labels version paired with the increment; the older cut
-    // still shows 20 as its own canonical, the newer one shows 20 → 5
+    // release cut: labels as of the increment; the older cut still shows
+    // 20 as its own canonical, the newer one shows 20 → 5
     val (k1, l1) = CuratedPipeline.releaseAsOf(spark, out, 1L)
     assert(k1.select($"id").as[Long].collect().sorted.toSeq == Seq(10L, 20L, 40L))
     assert(l1.filter($"id" === 20L).select($"comp").as[Long].head() == 20L)
@@ -522,14 +533,85 @@ class CuratedPipelineSpec extends AnyFunSuite {
     assert(k2.select($"id").as[Long].collect().sorted.toSeq == Seq(5L, 10L, 40L))
     assert(l2.filter($"id" === 20L).select($"comp").as[Long].head() == 5L)
 
-    // compactIndex with keepLabelVersions=1 vacuums v1/v2 → the old
-    // release cut fails LOUDLY instead of serving newer labels
+    // index compaction folds band keys only: every old release cut stays
+    // exact, labels included
+    val cuts = Seq(0L, 1L, 2L).map(releaseCut(out, _))
     CuratedPipeline.compactIndex(spark, out)
-    intercept[IllegalArgumentException] {
-      CuratedPipeline.releaseAsOf(spark, out, 1L)
+    assert(Seq(0L, 1L, 2L).map(releaseCut(out, _)) == cuts)
+    assert(cuts(1)._1 == Seq(10L, 20L, 40L))
+  }
+
+  test("label time travel across a demotion chain: releaseAsOf(k) ≡ the labels at k, across compaction") {
+    import spark.implicits._
+    val textA = "the quick brown fox jumps over the lazy dog"
+    val textB = "pack my box with five dozen liquor jugs today"
+    val b0 = Seq(CurDoc(20L, "u20", ts("2024-03-01 10:00:00"), textB, "a"),
+      CurDoc(21L, "u21", ts("2024-03-01 11:00:00"), textB, "a"), // dup of 20
+      CurDoc(30L, "u30", ts("2024-03-01 12:00:00"), textA, "a")).toDF()
+    val b1 = Seq(CurDoc(5L, "u05", ts("2024-03-02 10:00:00"), textB, "b")).toDF() // demotes 20 to 5
+    val b2 = Seq(CurDoc(1L, "u01", ts("2024-03-03 10:00:00"), textB, "c"), // demotes 5 to 1
+      CurDoc(31L, "u31", ts("2024-03-03 11:00:00"), textA, "c")).toDF() // dup of 30
+
+    val out = tmpDir()
+    def state() = (keptState(out).map(_._1), labelState(out))
+    CuratedPipeline.run(spark, b0, out, numBuckets = 4, snapshotGroups = 1, runId = "c0")
+    val s0 = state()
+    CuratedPipeline.curateIncrement(spark, b1, out, numBuckets = 4, runId = "c1")
+    val s1 = state()
+    CuratedPipeline.curateIncrement(spark, b2, out, numBuckets = 4, runId = "c2")
+    val s2 = state()
+    assert(s0 == ((Seq(20L, 30L), Seq((20L, 20L), (21L, 20L), (30L, 30L)))))
+    assert(s1 == ((Seq(5L, 30L), Seq((5L, 5L), (20L, 5L), (21L, 5L), (30L, 30L)))))
+    assert(s2 == ((Seq(1L, 30L),
+      Seq((1L, 1L), (5L, 1L), (20L, 1L), (21L, 1L), (30L, 30L), (31L, 30L)))))
+
+    val full = tmpDir()
+    CuratedPipeline.run(spark, b0.unionByName(b1).unionByName(b2), full,
+      numBuckets = 4, snapshotGroups = 1, runId = "full")
+    assert(labelState(out) == labelState(full))
+    assert(keptState(out) == keptState(full))
+    // the composed remap at 2 re-points 20 → 5 through 5 → 1; each key once
+    assert(spark.read.parquet(s"$out/index/remap/increment=2")
+      .select($"old_comp", $"comp").as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((5L, 1L), (20L, 1L)))
+
+    assert(Seq(0L, 1L, 2L).map(releaseCut(out, _)) == Seq(s0, s1, s2))
+    CuratedPipeline.compactIndex(spark, out)
+    CuratedPipeline.compactKept(spark, out, numBuckets = 4)
+    CuratedPipeline.vacuumKept(spark, out)
+    assert(Seq(0L, 1L, 2L).map(releaseCut(out, _)) == Seq(s0, s1, s2),
+      "every release cut must survive index and kept-table maintenance")
+  }
+
+  test("index writes are O(batch): one increment writes the same index rows over a 4x larger base") {
+    import spark.implicits._
+    // 30 eight-char words per doc drawn from md5 of its seed: equal seeds
+    // are exact duplicates, distinct seeds never share a band
+    def docs(rows: Seq[(Long, String)]) = rows.toDF("id", "seed").select($"id",
+      concat(lit("doc://"), $"id").as("url"),
+      lit("2024-03-01 00:00:00").cast("timestamp").as("warc_ts"),
+      expr("concat_ws(' ', transform(sequence(1, 30), " +
+        "i -> substr(md5(concat(seed, '_', cast(i AS string))), 1, 8)))").as("text"))
+    // the increment: 5 docs undercutting a base doc each (demotions), 5
+    // larger-id copies of base docs (dropped) and 20 new docs
+    val batch = docs((0 until 5).map(i => (1L + i, s"core$i")) ++
+      (5 until 10).map(i => (50000L + i, s"core$i")) ++
+      (0 until 20).map(i => (60000L + i, s"new$i")))
+    def incrementRows(baseSize: Int): Seq[Long] = {
+      val out = tmpDir()
+      // the same 10 colliding base docs at every size; the rest collide with nothing
+      val base = docs((0 until 10).map(i => (100L + i, s"core$i")) ++
+        (10 until baseSize).map(i => (1000L + i, s"filler$i")))
+      CuratedPipeline.run(spark, base, out, numBuckets = 4, snapshotGroups = 1, runId = "base")
+      CuratedPipeline.curateIncrement(spark, batch, out, numBuckets = 4, runId = "inc")
+      assert(CuratedPipeline.indexState(out) == Set(0L, 1L))
+      Seq("labels", "remap", "bands")
+        .map(t => spark.read.parquet(s"$out/index/$t/increment=1").count())
     }
-    val (k2b, _) = CuratedPipeline.releaseAsOf(spark, out, 2L) // current survives
-    assert(k2b.select($"id").as[Long].collect().sorted.toSeq == Seq(5L, 10L, 40L))
+    val small = incrementRows(500)
+    val large = incrementRows(2000)
+    assert(small == large, s"index rows written by one increment grew with the base: $small vs $large")
+    assert(small.take(2) == Seq(30L, 5L) && small(2) > 0, s"labels/remap/bands rows: $small")
   }
 
   test("torn curate run resumes and equals the clean run (dedup decision is stable)") {
@@ -563,7 +645,7 @@ class CuratedPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val out = tmpDir()
     CuratedPipeline.run(spark, corpus(), out, numBuckets = 8, snapshotGroups = 2, runId = "idx")
-    assert(CuratedPipeline.indexState(out) == ((1L, Set(0L))))
+    assert(CuratedPipeline.indexState(out) == Set(0L))
 
     val labels = CuratedPipeline.readLabels(spark, out)
       .select($"id", $"comp").as[(Long, Long)].collect().sorted
@@ -589,13 +671,13 @@ class CuratedPipelineSpec extends AnyFunSuite {
       numBuckets = 8, snapshotGroups = 4, runId = "t1")
     Files.delete(Paths.get(outTorn, "_manifest", "index_manifest.jsonl"))
     assert(ExtractPipeline.committedBuckets(outTorn) == (0 until 8).toSet)
-    assert(CuratedPipeline.indexState(outTorn) == ((0L, Set.empty[Long])))
+    assert(CuratedPipeline.indexState(outTorn).isEmpty)
 
     // every bucket is committed, so the replay writes no kept rows
     val resumed = CuratedPipeline.run(spark, corpus400(), outTorn,
       numBuckets = 8, snapshotGroups = 4, runId = "t2")
     assert(resumed.isEmpty)
-    assert(CuratedPipeline.indexState(outTorn) == ((1L, Set(0L))))
+    assert(CuratedPipeline.indexState(outTorn) == Set(0L))
 
     def labels(dir: String) = CuratedPipeline.readLabels(spark, dir)
       .select($"id", $"comp").as[(Long, Long)].collect().sorted
@@ -611,7 +693,7 @@ class CuratedPipelineSpec extends AnyFunSuite {
     // the index is committed, so the next run is a no-op
     assert(CuratedPipeline.run(spark, corpus400(), outTorn,
       numBuckets = 8, snapshotGroups = 4, runId = "t3").isEmpty)
-    assert(CuratedPipeline.indexState(outTorn) == ((1L, Set(0L))))
+    assert(CuratedPipeline.indexState(outTorn) == Set(0L))
   }
 
   /** 400 docs over 8 partitions; docs 300..399 repeat the text of docs
@@ -820,7 +902,7 @@ class CuratedPipelineSpec extends AnyFunSuite {
 
     val inc = keptIdText(s"$outInc/curated")
     assert(inc.nonEmpty)
-    assert(CuratedPipeline.indexState(s"$outInc/curated")._2 == Set(0L, 1L),
+    assert(CuratedPipeline.indexState(s"$outInc/curated") == Set(0L, 1L),
       "the increment must fold as increment 1, not rebuild the corpus")
     assert(inc == keptIdText(s"$outFull/curated"),
       "base build + increment must keep exactly what one build over both keeps")
@@ -850,7 +932,7 @@ class CuratedPipelineSpec extends AnyFunSuite {
     assert(CuratedPipeline.admit(noindexUrls.toDF(), honorNoindex = false, gopherGate = true)
       .count() > 0, "the planted noindex pages must otherwise pass the release gate")
     releaseIncrement(planted, out)
-    assert(CuratedPipeline.indexState(s"$out/curated")._2.contains(1L))
+    assert(CuratedPipeline.indexState(s"$out/curated").contains(1L))
 
     val opted = noindexUrls.select($"url").as[String].collect().toSet
     val keptUrls = CuratedPipeline.readKept(spark, s"$out/curated")
@@ -883,9 +965,9 @@ class CuratedPipelineSpec extends AnyFunSuite {
     // landed, its index line did not
     val mf = Paths.get(curated, "_manifest", "index_manifest.jsonl")
     Files.write(mf, (Files.readAllLines(mf).get(0) + "\n").getBytes("UTF-8"))
-    assert(CuratedPipeline.indexState(curated)._2 == Set(0L))
+    assert(CuratedPipeline.indexState(curated) == Set(0L))
     releaseIncrement(batch, out)
-    assert(CuratedPipeline.indexState(curated)._2 == Set(0L, 1L))
+    assert(CuratedPipeline.indexState(curated) == Set(0L, 1L))
 
     val full = tmpDir()
     releaseBase(base.unionByName(batch).dropDuplicates("url"), full)

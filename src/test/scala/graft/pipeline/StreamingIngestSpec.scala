@@ -159,8 +159,8 @@ class StreamingIngestSpec extends AnyFunSuite {
       .option("recursiveFileLookup", "true").parquet(src).as[Page]
     val q = StreamingIngest.startCurated(stream, ex, cur, ckpt, numBuckets = 8)
     q.processAllAvailable()
-    // first batch builds the corpus AND commits the band-key index (v1)
-    assert(CuratedPipeline.indexState(cur)._1 == 1L)
+    // first batch builds the corpus AND commits the dedup index (increment 0)
+    assert(CuratedPipeline.indexState(cur) == Set(0L))
     val keptAfterB0 = CuratedPipeline.readKept(spark, cur).count()
     assert(keptAfterB0 > 0)
 
@@ -174,8 +174,8 @@ class StreamingIngestSpec extends AnyFunSuite {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     q.processAllAvailable()
     q.stop()
-    // second batch curated INCREMENTALLY: labels version bumped, not rebuilt
-    assert(CuratedPipeline.indexState(cur)._1 == 2L)
+    // second batch curated INCREMENTALLY: index increment 1, not a rebuild
+    assert(CuratedPipeline.indexState(cur) == Set(0L, 1L))
 
     // the continuously-built corpus must equal the one-shot batch pipeline
     // over the union — kept rows AND cluster labels
@@ -224,6 +224,27 @@ class StreamingIngestSpec extends AnyFunSuite {
     val dupLabels = CuratedPipeline.readLabels(spark, cur)
       .groupBy("id").count().filter($"count" > 1).count()
     assert(dupLabels == 0)
+  }
+
+  test("an empty first micro-batch: the next batch curates to what it curates alone") {
+    import spark.implicits._
+    val ex = tmp(); val cur = tmp()
+    // a landing segment without one HTTP-200 response extracts no page
+    StreamingIngest.commitBatch(ex, numBuckets = 8)(spark.emptyDataset[Page], 0L)
+    assert(Commit.lines(Commit.manifest(ex, "stream_manifest.jsonl")) ==
+      Seq("""{"batch_id":0,"rows":0,"ok_rows":0}"""))
+    assert(CuratedPipeline.curateBatch(spark, 0L, ex, cur, numBuckets = 8).isEmpty)
+    assert(CuratedPipeline.indexState(cur).isEmpty, "an empty batch commits no index increment")
+    StreamingIngest.commitBatch(ex, numBuckets = 8)(slice(0, 100), 1L)
+    CuratedPipeline.curateBatch(spark, 1L, ex, cur, numBuckets = 8)
+
+    val exAlone = tmp(); val curAlone = tmp()
+    StreamingIngest.commitBatch(exAlone, numBuckets = 8)(slice(0, 100), 1L)
+    CuratedPipeline.curateBatch(spark, 1L, exAlone, curAlone, numBuckets = 8)
+    def keptSet(dir: String) = CuratedPipeline.readKept(spark, dir)
+      .select($"url", $"extracted_text").as[(String, String)].collect().sortBy(_._1).toSeq
+    assert(keptSet(curAlone).nonEmpty)
+    assert(keptSet(cur) == keptSet(curAlone))
   }
 
   test("freshly-initialized table reads as EMPTY, not AnalysisException") {
