@@ -76,8 +76,8 @@ object Bpe {
   /** The pinned fixture merge table q77 inlines into BOTH dialects: the
     * first 24 merges learned by [[learn]] from the deterministic
     * `documents` vocabulary at sf0.01 (word counts over
-    * `/root/testdata/sf0.01/documents.parquet`; reproduce with
-    * `sbt "Test/runMain graft.core.BpeLearnMain /root/testdata/sf0.01"`).
+    * `/root/testdata/sf0.01/documents.parquet`; `BpeSpec` relearns and
+    * checks it).
     */
   val DefaultMerges: Seq[(String, String)] = Seq(
     ("e", "r"),

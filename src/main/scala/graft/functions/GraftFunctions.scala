@@ -99,32 +99,6 @@ object GraftFunctions {
     struct(afterP.as("clean"), ne.as("n_emails"), ni.as("n_ips"), np.as("n_phones"))
   }
 
-  /** Document quality score in [0, 1] — the q37 signals (length, alphabetic
-    * ratio, stopword density) folded into one gate-able number, built from
-    * codegen'd built-ins only (no UDF in the curate hot path):
-    *   0.4 · min(1, tokens/20)   — enough words to be a document
-    *   0.3 · alpha/chars         — symbol/markup soup scores low
-    *   0.3 · min(1, 8·stops/tokens) — English-function-word density
-    * Deterministic, null/empty-safe (score 0). Thresholds are corpus
-    * policy: ≈0.5 keeps normal prose, drops boilerplate fragments.
-    */
-  def qualityScore(text: Column): Column = {
-    import org.apache.spark.sql.functions._
-    val t = trim(coalesce(text, lit("")))
-    val nChars = length(t).cast("double")
-    val nTok = size(split(t, "\\s+")).cast("double")
-    val alpha = length(regexp_replace(t, "[^A-Za-z]", "")).cast("double")
-    val padded = concat(lit(" "), lower(t), lit(" "))
-    val stops =
-      (size(split(padded, " the ")) - 1) + (size(split(padded, " a ")) - 1) +
-        (size(split(padded, " of ")) - 1) + (size(split(padded, " and ")) - 1) +
-        (size(split(padded, " is ")) - 1) + (size(split(padded, " to ")) - 1)
-    when(nChars === 0.0, 0.0).otherwise(
-      least(lit(1.0), nTok / 20.0) * 0.4 +
-        (alpha / nChars) * 0.3 +
-        least(lit(1.0), stops.cast("double") * 8.0 / nTok) * 0.3)
-  }
-
   /** Gopher quality rules (Rae et al. 2021, "Scaling Language Models",
     * Table A1 — the public standard for web-corpus filtering), as a
     * built-ins-only struct of per-rule booleans + the overall decision.

@@ -21,6 +21,13 @@ import org.apache.spark.sql.functions._
   * everything else is dropped. Docs too short to shingle (<3 words) have
   * no signature and are kept as trivially-unique singletons.
   *
+  * Gate: every row that enters a kept table — base build
+  * ([[runFromPages]]), release increment (`RunRelease.increment`) or
+  * stream batch ([[curateBatch]]) — passes [[admit]], then [[scrub]] when
+  * the release scrubs PII. The gate has no setting a base build can use
+  * and an increment cannot, so a base plus increments built with the same
+  * `gopherGate`/`scrubPii` equals one build over all of them.
+  *
   * Resume: the dedup decision is GLOBAL (labels depend on the whole
   * corpus), so a resumed run recomputes labels over the full input — which
   * is deterministic, so the keep set is identical and only the buckets
@@ -368,23 +375,24 @@ object CuratedPipeline {
     lineage
   }
 
-  /** The row gate every kept table is built through: successful
-    * extractions of at least `minTextLength` chars, minus robots
-    * `noindex` opt-outs, minus rows under the quality floor or failing the
-    * Gopher rules; the extract table's layout columns dropped (the curate
-    * stage re-derives them, and numBuckets may differ) and the doc id
-    * `xxhash64(url)` added. See [[runFromPages]] for each knob.
+  /** The column every gated build clusters by besides content: the
+    * site-declared `<link rel=canonical>` target.
     */
-  private[graft] def admit(extracted: DataFrame, minTextLength: Int = 1,
-      minQuality: Double = 0.0, honorNoindex: Boolean = true,
-      gopherGate: Boolean = false): DataFrame =
+  private val Canonical = Some("canonical_url")
+
+  /** The row gate every kept table is built through: successful,
+    * non-empty extractions minus robots `noindex` opt-outs (the site
+    * owner's opt-out, dropped before labels form, so such a page never
+    * serves as a cluster canonical) and, with `gopherGate`, minus rows
+    * failing the Gopher rules
+    * ([[graft.functions.GraftFunctions.gopherQuality]], the q69-oracled
+    * web-corpus filter); the extract table's layout columns dropped (the
+    * curate stage re-derives them, and numBuckets may differ) and the doc
+    * id `xxhash64(url)` added.
+    */
+  private[graft] def admit(extracted: DataFrame, gopherGate: Boolean = false): DataFrame =
     extracted
-      .filter(col("success") && col("text_length") >= minTextLength)
-      .filter(if (honorNoindex) !col("noindex") else lit(true))
-      .filter(
-        if (minQuality <= 0.0) lit(true)
-        else graft.functions.GraftFunctions
-          .qualityScore(col("extracted_text")) >= minQuality)
+      .filter(col("success") && col("text_length") >= 1 && !col("noindex"))
       .filter(
         if (!gopherGate) lit(true)
         else graft.functions.GraftFunctions
@@ -420,7 +428,6 @@ object CuratedPipeline {
     // within-batch identity: a crawler can emit the same url twice in one
     // segment; one row per id before curation (first fetch wins)
     val batch = rows.dropDuplicates("id")
-    val canonical = Some("canonical_url")
     val incs = indexState(curatedDir)
     if (incs.isEmpty) {
       // an empty first batch (a landing segment without one HTTP-200 page)
@@ -428,14 +435,14 @@ object CuratedPipeline {
       // next batch's read of the kept table nothing to read
       if (batch.isEmpty) Seq.empty
       else run(spark, batch, curatedDir, idCol = "id", textCol = "extracted_text",
-        numBuckets = numBuckets, snapshotGroups = 1, runId = runId, canonicalCol = canonical)
+        numBuckets = numBuckets, snapshotGroups = 1, runId = runId, canonicalCol = Canonical)
     } else {
       // labeled ids need no remap: it re-points comps only
       val seen = labelsAsOf(spark, curatedDir, incs.max, remap = None).select(col("id"))
         .unionByName(readKept(spark, curatedDir).select(col("id")))
       curateIncrement(spark, batch.join(seen, Seq("id"), "left_anti"), curatedDir,
         idCol = "id", textCol = "extracted_text", numBuckets = numBuckets,
-        runId = runId, canonicalCol = canonical)
+        runId = runId, canonicalCol = Canonical)
     }
   }
 
@@ -480,109 +487,29 @@ object CuratedPipeline {
     * re-extracts), and a kill at any point resumes from whichever stage's
     * manifest is incomplete.
     *
-    * @param minTextLength quality gate: extracted docs shorter than this
-    *                      never reach dedup
-    * @param minQuality    quality gate: minimum `GraftFunctions.qualityScore`
-    *                      (the q37 signals — length, alpha ratio, stopword
-    *                      density — as one [0,1] number). 0.0 = length/
-    *                      success gating only (the score column is skipped
-    *                      entirely so the default path pays nothing).
-    * @param honorNoindex  drop pages whose head carried a robots
-    *                      `noindex`/`none` directive before dedup — the
-    *                      site owner's opt-out, which responsible
-    *                      training-data pipelines honor. A dropped-for-
-    *                      noindex page also never serves as a cluster
-    *                      canonical (it is gone before labels form).
-    * @param clusterByCanonical feed the `<link rel=canonical>` column into
-    *                      the components pass, so site-declared duplicate
-    *                      groups merge with content near-dup clusters
-    * @param gopherGate    gate on the full Gopher rule set
-    *                      ([[graft.functions.GraftFunctions.gopherQuality]],
-    *                      the q69-oracled rules) instead of/on top of the
-    *                      composite score — the production-standard
-    *                      web-corpus filter
+    * The rows pass the gate every increment passes: [[admit]], then
+    * [[scrub]] when `scrubPii`.
+    *
+    * @param gopherGate    drop rows failing the Gopher rules (see [[admit]])
     * @param scrubPii      redact emails/phones/IPv4s to typed tokens
     *                      BEFORE dedup ([[graft.functions.GraftFunctions.piiScrub]],
     *                      q75's operator), adding a `pii_redactions` count
     *                      column; the released corpus never carries raw PII
-    * @param templateStrip remove per-host TEMPLATE paragraphs
-    *                      ([[TemplateStrip]], q97's operator — strict-
-    *                      majority boilerplate like nav/footer blocks)
-    *                      after the admission gates and BEFORE scrub/dedup,
-    *                      adding a `template_removed` count column; the
-    *                      minTextLength gate re-applies afterwards so a
-    *                      page that was ALL template leaves the corpus
     * @return (extract-stage lineage, curate-stage lineage) for THIS run
     */
   def runFromPages(spark: SparkSession, pages: Dataset[Page], outDir: String,
       numBuckets: Int = 32, snapshotGroups: Int = 4, runId: String = "curate",
-      minTextLength: Int = 1, minQuality: Double = 0.0,
-      honorNoindex: Boolean = true, clusterByCanonical: Boolean = true,
-      gopherGate: Boolean = false, scrubPii: Boolean = false,
-      templateStrip: Boolean = false, hostCap: Option[Int] = None,
-      blocklist: Option[DataFrame] = None): (Seq[LineageRow], Seq[LineageRow]) = {
+      gopherGate: Boolean = false, scrubPii: Boolean = false): (Seq[LineageRow], Seq[LineageRow]) = {
     val extractLineage = ExtractPipeline.run(spark, pages, s"$outDir/extract",
       numBuckets, snapshotGroups, runId)
-    val gatedBase = admit(ExtractPipeline.readOutput(spark, s"$outDir/extract"),
-      minTextLength, minQuality, honorNoindex, gopherGate)
-    // URL-level blocklist FIRST among the content gates (the RefinedWeb
-    // order: a blocklisted host's pages never reach template/scrub/dedup
-    // work at all — q111's operator as a pipeline stage). Verdicts are
-    // computed per DISTINCT HOST, so the suffix explode and the rule join
-    // run over a host-cardinality table; pages only pay one host-keyed
-    // join against the allowed set
-    val gatedHosted = blocklist match {
-      case None => gatedBase
-      case Some(rules) =>
-        val withHost = gatedBase.withColumn("__host", SkewTools.hostOf(col("url")))
-        val allowedHosts = UrlBlocklist.decisions(
-            withHost.select(col("__host")).distinct(), rules,
-            idCol = "__host", hostCol = "__host")
-          .filter(col("category") === "allowed").drop("category")
-        withHost.join(allowedHosts, Seq("__host")).drop("__host")
-    }
-    // template strip BEFORE scrub/dedup: boilerplate must not feed band
-    // keys (two pages of one host differing only in content would share
-    // most template shingles), and the released text is the stripped text
-    val gatedTemplated =
-      if (!templateStrip) gatedHosted
-      else {
-        // pin the gated frame first: the strip consumes it four ways
-        // (exploded paras, two distinct-count aggs, the join-back left
-        // side) and without the pin each pass re-runs the extract scan
-        // and gates
-        val base = Pin(gatedHosted)
-        val withHost = base.withColumn("__host", SkewTools.hostOf(col("url")))
-        val stripped = TemplateStrip
-          .strip(withHost, "__host", "id", "extracted_text")
-          .select(col("id"), col("clean_text"),
-            col("n_removed").as("template_removed"))
-        base.join(stripped, Seq("id"))
-          .withColumn("extracted_text", col("clean_text"))
-          .drop("clean_text")
-          // a page that was ALL template is boilerplate, not content
-          .filter(length(col("extracted_text")) >= minTextLength)
-      }
+    val admitted = admit(ExtractPipeline.readOutput(spark, s"$outDir/extract"), gopherGate)
     // scrub BEFORE dedup: released text must be the deduped text, and two
     // docs differing only in their planted PII dedupe post-redaction
-    val gated = if (scrubPii) scrub(gatedTemplated) else gatedTemplated
-    // domain balancing LAST among the gates (the cap picks among pages
-    // that already passed quality/template/scrub) and BEFORE dedup: at
-    // most `cap` pages per host enter the corpus, chosen by md5-of-id —
-    // an unbiased per-host sample, q107's operator as a pipeline stage
-    val balanced = hostCap match {
-      case None => gated
-      case Some(cap) =>
-        CorpusMixer.capPerKey(
-            gated.withColumn("__host", SkewTools.hostOf(col("url"))),
-            "__host", cap, Seq(md5(col("id").cast("string")), col("id")))
-          .drop("__host")
-    }
-    val curateLineage = run(spark, balanced, s"$outDir/curated",
+    val gated = if (scrubPii) scrub(admitted) else admitted
+    val curateLineage = run(spark, gated, s"$outDir/curated",
       idCol = "id", textCol = "extracted_text",
       numBuckets = numBuckets, snapshotGroups = snapshotGroups,
-      runId = runId,
-      canonicalCol = if (clusterByCanonical) Some("canonical_url") else None)
+      runId = runId, canonicalCol = Canonical)
     (extractLineage, curateLineage)
   }
 

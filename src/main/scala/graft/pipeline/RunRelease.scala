@@ -68,9 +68,9 @@ object RunRelease {
   /** Fold a later batch of `pages` into the curated corpus under
     * `outDir` through the base build's own gate: extract, drop urls the
     * base extract table already holds, [[CuratedPipeline.admit]], scrub
-    * when `scrubPii`, [[CuratedPipeline.fold]]. The rows enter in the
-    * released shape of `runFromPages(scrubPii, gopherGate)`, so passing the
-    * base build's pair makes base + increment equal one build over both.
+    * when `scrubPii`, [[CuratedPipeline.fold]]. `gopherGate` and
+    * `scrubPii` are the only settings of `runFromPages`' gate, so with the
+    * base build's values base + increment equals one build over both.
     * Idempotent: a rerun folds an empty delta.
     */
   def increment(spark: SparkSession, pages: Dataset[Page], outDir: String,

@@ -26,9 +26,9 @@ object WarcSource {
     * `text`/`lang` stay empty — they are extraction OUTPUTS here, not
     * crawl inputs.
     */
-  def readPages(spark: SparkSession, glob: String, onlyHttpOk: Boolean = true): Dataset[Page] =
+  def readPages(spark: SparkSession, glob: String): Dataset[Page] =
     readViaTasks(spark, glob) { r =>
-      if (r.warcType == "response" && (!onlyHttpOk || r.httpStatus == 200))
+      if (r.warcType == "response" && r.httpStatus == 200)
         Some(Page(r.targetUri, parseWarcDate(r.date), r.body, "", ""))
       else None
     }(org.apache.spark.sql.Encoders.product[Page])
@@ -93,7 +93,8 @@ object WarcSource {
 
   /** Continuous crawl ingestion: a Structured Streaming source over a
     * landing directory — each NEW segment file becomes one row of the
-    * `binaryFile` stream, parsed into Pages in the same micro-batch.
+    * `binaryFile` stream, whose HTTP-200 `response` records become Pages
+    * in the same micro-batch.
     * Pair with `StreamingIngest.commitBatch` in `foreachBatch` for
     * exactly-once commits into the partitioned table (tested end-to-end
     * in `WarcSpec`). Scale note: `binaryFile` materializes each segment
@@ -101,7 +102,7 @@ object WarcSource {
     * segments fit); the batch path (`readPages`) streams with O(record)
     * memory and remains the bulk-backfill tool.
     */
-  def readPagesStream(spark: SparkSession, dir: String, onlyHttpOk: Boolean = true,
+  def readPagesStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): Dataset[Page] = {
     import spark.implicits._
     val reader = spark.readStream.format("binaryFile")
@@ -111,7 +112,7 @@ object WarcSource {
       .select("content").as[Array[Byte]]
       .flatMap { bytes =>
         WarcReader.records(new java.io.ByteArrayInputStream(bytes))
-          .filter(r => r.warcType == "response" && (!onlyHttpOk || r.httpStatus == 200))
+          .filter(r => r.warcType == "response" && r.httpStatus == 200)
           .map(r => Page(r.targetUri, parseWarcDate(r.date), r.body, "", ""))
       }
   }

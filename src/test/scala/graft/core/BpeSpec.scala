@@ -64,4 +64,22 @@ class BpeSpec extends AnyFunSuite {
       known += (a + b)
     }
   }
+
+  test("DefaultMerges are the 24 merges learned from the sf0.01 documents vocabulary") {
+    import org.apache.spark.sql.functions._
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[4]").appName("bpe-spec")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    try {
+      // word counts are exact aggregates and learning breaks ties
+      // lexicographically, so the table is a pure function of the file
+      val counts = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+        .select(explode(split(col("text"), " ")).as("w"))
+        .filter(length(col("w")) > 0)
+        .groupBy("w").count()
+        .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
+      assert(Bpe.learn(counts, 24) == Bpe.DefaultMerges)
+    } finally spark.stop()
+  }
 }

@@ -142,25 +142,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(r.getString(6) == "generic")
   }
 
-  test("qualityScore orders prose above fragments above junk, null/empty safe") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val prose = "the cat sat on a mat and the dog went to the park because " +
-      "it is a fine day for a walk and the sun is out over the hills"
-    val fragment = "click here menu next prev"
-    val junk = "@@@@ #### 1234 %%%% <<<>>> 0x9f"
-    val rows = Seq(("prose", prose), ("frag", fragment), ("junk", junk),
-      ("empty", ""), ("nul", null))
-      .toDF("k", "t")
-      .select(col("k"), graft.functions.GraftFunctions.qualityScore(col("t")).as("q"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(rows("prose") > 0.85, s"prose must score high, got ${rows("prose")}")
-    assert(rows("prose") > rows("frag") && rows("frag") > rows("junk"),
-      s"ordering violated: $rows")
-    assert(rows("empty") == 0.0 && rows("nul") == 0.0)
-    assert(rows.values.forall(v => v >= 0.0 && v <= 1.0))
-  }
-
   test("incremental_mean aggregator equals built-in avg") {
     import spark.implicits._
     val df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")

@@ -162,6 +162,32 @@ class InvertedIndexSpec extends AnyFunSuite {
     assert(pset(InvertedIndex.read(spark, idx)).contains(("zz", 1000L, 1L)))
   }
 
+  test("append is O(new data): one batch writes the same generation over a 4x larger base, earlier generations untouched") {
+    // 12-word docs over a 512-term vocabulary, disjoint id ranges
+    def docs(from: Long, until: Long) = spark.range(from, until).select(
+      col("id").as("doc_id"),
+      expr("concat_ws(' ', transform(sequence(1, 12), i -> " +
+        "substr(md5(cast(pmod(id * 37 + i * 101, 512) AS string)), 1, 6)))").as("text"))
+    // generation 0's files (postings and lengths): name -> size
+    def gen0Files(idx: String): Map[String, Long] =
+      Seq("g0", "l0").flatMap { d =>
+        new java.io.File(idx, d).listFiles().map(f => s"$d/${f.getName}" -> f.length())
+      }.toMap
+    val batch = docs(100000L, 100050L)
+    def appendOver(baseDocs: Long): (Long, Long) = {
+      val idx = graft.TestDirs.create("graft-idx-onew").toString
+      InvertedIndex.append(spark, docs(0L, baseDocs), idx)
+      val before = gen0Files(idx)
+      assert(InvertedIndex.append(spark, batch, idx) == 1L)
+      assert(gen0Files(idx) == before, s"appending over $baseDocs docs changed generation 0's files")
+      (spark.read.parquet(s"$idx/g1").count(), spark.read.parquet(s"$idx/l1").count())
+    }
+    val small = appendOver(200L)
+    assert(small._2 == 50L && small._1 > 0L)
+    assert(appendOver(800L) == small,
+      "the batch's generation must not grow with the base it is appended to")
+  }
+
   test("fielded search: combined = body + w×anchor, anchor-only docs rank, combination happens BEFORE top-k") {
     // doc 1 says 'cat' in body only; doc 2 is pointed AT by 'cat' anchors
     // but never says it; docs 3..40 are filler so df/norms are non-trivial
